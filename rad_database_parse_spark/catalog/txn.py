@@ -33,6 +33,7 @@ import json
 import os
 import uuid
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -182,18 +183,30 @@ def merge_upsert_txn(
     apply the copy-on-write merge, commit; on CommitConflict re-derive
     from the NEW snapshot and retry — updates are never lost and never
     applied twice, the serializable-upsert contract Delta's MERGE gives.
+
+    The merge reads `updates` twice (its keys in the anti-join, its rows
+    in the union), so `updates` is persisted for the call unless the
+    caller already cached it: each commit, and every retry, evaluates it
+    once. Only a cache this call made is released, before it returns.
     """
     from ..operators.mutate import merge_upsert
 
-    for _ in range(max_retries):
-        base_version = latest_version(root)
-        base = read_snapshot(spark, root, base_version)
-        merged = merge_upsert(base, updates, [key])
-        try:
-            return commit(
-                spark, root, merged, op="merge_upsert",
-                expected_version=base_version,
-            )
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"gave up after {max_retries} retries at {root}")
+    owned = updates.storageLevel == StorageLevel.NONE
+    if owned:
+        updates = updates.persist()
+    try:
+        for _ in range(max_retries):
+            base_version = latest_version(root)
+            base = read_snapshot(spark, root, base_version)
+            merged = merge_upsert(base, updates, [key])
+            try:
+                return commit(
+                    spark, root, merged, op="merge_upsert",
+                    expected_version=base_version,
+                )
+            except CommitConflict:
+                continue
+        raise CommitConflict(f"gave up after {max_retries} retries at {root}")
+    finally:
+        if owned:
+            updates.unpersist()

@@ -51,6 +51,12 @@ def normalize_strings(
 PI_KEYWORDS = ["principal", "investigator"]
 ABBREV_KEYWORDS = ["acronym", "abbreviations"]
 RAD_KEYWORDS = ["tid", "see", "dd", "ddd", "seu", "let", "ongoing", "dose", "result"]
+# first match wins, in this order (the reference's if/elif chain)
+TITLE_CLASSES = [
+    ("principal_investigator", PI_KEYWORDS),
+    ("abbreviation", ABBREV_KEYWORDS),
+    ("rad", RAD_KEYWORDS),
+]
 
 
 def _kw_rx(words: Sequence[str]) -> str:
@@ -62,12 +68,11 @@ def classify_title(title: Column | str) -> Column:
     'rad' | NULL (NULL ⇒ caller drops the table, as in type_check,
     tables.py:117-126). First-match-wins order follows the reference."""
     t = F.lower(F.col(title) if isinstance(title, str) else title)
-    return (
-        F.when(t.rlike(_kw_rx(PI_KEYWORDS)), F.lit("principal_investigator"))
-        .when(t.rlike(_kw_rx(ABBREV_KEYWORDS)), F.lit("abbreviation"))
-        .when(t.rlike(_kw_rx(RAD_KEYWORDS)), F.lit("rad"))
-        .otherwise(F.lit(None).cast("string"))
-    )
+    (name, words), *rest = TITLE_CLASSES
+    out = F.when(t.rlike(_kw_rx(words)), F.lit(name))
+    for name, words in rest:
+        out = out.when(t.rlike(_kw_rx(words)), F.lit(name))
+    return out.otherwise(F.lit(None).cast("string"))
 
 
 # --------------------------------------------------------------------------

@@ -6,10 +6,19 @@ find_table_type (140-153) + map_header/map_row (167-263) +
 main.py:88-106 (csv_check's pandas round trip is what makes an empty
 mapped cell invalidate its row: '' → NaN → map_row raises).
 
+Everything after extraction is table-grain work inside ONE file: the
+continuation merge follows a file's own table order, and every dedup key
+contains the file name. So the chain runs as ``rad_rows_from_cells``, a
+pure-Python function of one file's cells, called in the same
+``mapInPandas`` task that extracted them (sources/pdf.map_pdf_files) —
+the reference's own per-file loop, one Spark job, no shuffle and no
+driver round trip. Its rules are those of the Catalyst operators in
+operators/core.py (classify_title's keyword classes, row_density's
+space-only trim); tests/test_rad_pipeline.py pins each one.
+
 Used by the registry query `pdf_real_lattice_goldens` (driver-checked
-against the pinned golden per-file counts) and by
-tests/test_pdf_real_extractor.py (field-exact comparison against the
-reference's own main.db).
+against the pinned golden per-file counts), by perfbench's rad_ingest
+workload, and by tests/test_rad_pipeline.py.
 
 Known, measured-immaterial divergence (ADVICE r7): the A14 dedup here
 keys on all 10 canonical columns (nulls as a sentinel), while the
@@ -22,18 +31,19 @@ here. tools/dedup_semantics_probe.py replays BOTH semantics over all
 10 contributing compendium PDFs: per-file counts are IDENTICAL on
 every file (no table-pair in the corpus has a containment-related
 mapped set with colliding values), so the simpler whole-key dedup is
-kept — it is one hash-shuffle with no row replication, where faithful
-subset matching needs a per-subset-class projection join.
+kept.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+import re
+from functools import partial
 
-from .core import classify_title, table_density_filter
+from pyspark.sql import DataFrame, SparkSession
+
+from .core import TITLE_CLASSES, _kw_rx
 from .header_map import resolve_header_mapping
-from ..sources.pdf import extract_pdf_cells
+from ..sources.pdf import map_pdf_files
 
 RAD_CATEGORIES = [
     "part_number",
@@ -47,15 +57,91 @@ RAD_CATEGORIES = [
     "degradation_level",
     "proton_fluence",
 ]
+RAD_COLUMNS = ["doc_filename", "doc_title", *RAD_CATEGORIES]
+RAD_DDL = ", ".join(f"{c} string" for c in RAD_COLUMNS)
+
+_TITLE_RX = [(name, re.compile(_kw_rx(words))) for name, words in TITLE_CLASSES]
 
 
-# Persisted cell grids of recent invocations. The returned DataFrame is
-# lazy and still reads `cells` when the CALLER acts on it, so the cache
-# cannot be dropped inside this function; instead each new invocation
-# releases older blocks so repeated calls in one session hold at most
-# two cached grids (ADVICE r7; two because pdf_real_lattice_goldens
-# legitimately unions a strict-regime and a density-regime branch).
-_live_cells: list[DataFrame] = []
+def _title_class(title: str) -> str | None:
+    """core.classify_title on one string: first keyword class that matches."""
+    t = title.lower()
+    return next((name for name, rx in _TITLE_RX if rx.search(t)), None)
+
+
+def _nonblank(v: str | None) -> bool:
+    # the same test as Catalyst's trim (core.row_density): it strips ASCII
+    # spaces only, so "\t" or "\n" is not blank
+    return v is not None and v.strip(" ") != ""
+
+
+def _table_mapping(title: str, header: dict[int, str]) -> dict[str, int] | None:
+    """A9 + A10 for one anchor table: {canonical: column index}, or None
+    when the table contributes no rows (not rad, no header row, or a
+    mapped header too sparse for map_header: (n + 2) / 10 < 0.5)."""
+    if _title_class(title) != "rad" or not header:
+        return None
+    hdr = [header.get(i, "") for i in range(max(header) + 1)]
+    mapping = resolve_header_mapping(hdr, RAD_CATEGORIES)
+    return mapping if (len(mapping) + 2) / 10 >= 0.5 else None
+
+
+def rad_rows_from_cells(
+    fname: str, cells: list[tuple], validity: str = "strict"
+) -> list[tuple]:
+    """One file's extractor cells → its deduped rad-table records.
+
+    `cells` are Extractor tuples (doc_title, page, table_idx, table_title,
+    row_idx, col_idx, value); the result rows follow RAD_COLUMNS, with
+    unmapped columns None. Tables are visited in (page, table_idx) order:
+
+    - A5: a table survives iff its share of filled cells is > 0.25;
+    - A6: a title that is not blank (after stripping spaces) anchors;
+      a blank-titled table continues the last surviving anchor — its
+      header row is dropped and it uses the anchor's title and mapping —
+      and is dropped when no anchor precedes it;
+    - A9/A10: see _table_mapping;
+    - validity (see reference_rad_rows): "strict" needs every mapped
+      cell non-empty, "density" needs >= 3 non-empty mapped cells;
+    - newlines in values become spaces, then rows equal after removing
+      quote characters are deduped (the first in table order is kept).
+    """
+    tables: dict[tuple[int, int], tuple[str | None, dict]] = {}
+    doc_title = None
+    for doc_title, page, tidx, ttitle, ridx, cidx, val in cells:
+        grid = tables.setdefault((page, tidx), (ttitle, {}))[1]
+        grid.setdefault(ridx, {})[cidx] = val
+    out: list[tuple] = []
+    seen: set[tuple] = set()
+    mapping = None  # the last surviving anchor's, None before any anchor
+    for key in sorted(tables):
+        title, grid = tables[key]
+        vals = [v for row in grid.values() for v in row.values()]
+        if sum(map(_nonblank, vals)) / len(vals) <= 0.25:
+            continue
+        if _nonblank(title):
+            mapping = _table_mapping(title, grid.get(0, {}))
+        if mapping is None:
+            continue
+        for ridx in sorted(grid):
+            if ridx == 0:
+                continue  # an anchor's header, or a repeated one
+            rec = {c: grid[ridx].get(i) for c, i in mapping.items()}
+            n_ok = sum(v is not None and v != "" for v in rec.values())
+            if n_ok < (len(rec) if validity == "strict" else 3):
+                continue
+            flat = [
+                None if rec.get(c) is None else rec[c].replace("\n", " ")
+                for c in RAD_CATEGORIES
+            ]
+            dkey = tuple(
+                "\x00" if v is None else v.replace("'", "").replace('"', "")
+                for v in flat
+            )
+            if dkey not in seen:
+                seen.add(dkey)
+                out.append((fname, doc_title, *flat))
+    return out
 
 
 def reference_rad_rows(
@@ -66,9 +152,10 @@ def reference_rad_rows(
     """binaryFile rows → the reference's deduped rad-table records.
 
     Output: one row per inserted rad record with `doc_filename`,
-    `doc_title`, and the ten canonical columns (unmapped ones null).
-    Table-grain planning (headers, mappings) is BOUNDED driver work;
-    everything row-grain is Catalyst.
+    `doc_title`, and the ten canonical columns (unmapped ones null). The
+    result is lazy: one job, whose single map stage extracts each file
+    and runs rad_rows_from_cells on its cells. `spark` is unused; its
+    callers pass it.
 
     `validity` selects the row-validity regime, because the reference's
     loader had TWO depending on the --csv_bypass flag (main.py:96,
@@ -95,189 +182,5 @@ def reference_rad_rows(
       spec cells and is valid only under this rule)."""
     if validity not in ("strict", "density"):
         raise ValueError(f"unknown validity regime: {validity!r}")
-    while len(_live_cells) >= 2:
-        stale = _live_cells.pop(0)
-        # The module-level FIFO can hold a DataFrame from a STOPPED
-        # SparkSession (test suites spin up several sessions per process)
-        # and unpersist on a dead context raises instead of no-opping
-        # (ADVICE r8). Probe liveness explicitly so ONLY the dead-session
-        # case is skipped — any other unpersist failure is a genuine
-        # cache-management bug and must propagate (ADVICE r9).
-        try:
-            jsc = stale.sparkSession.sparkContext._jsc
-            alive = jsc is not None and not jsc.sc().isStopped()
-        except Exception:
-            alive = False
-        if alive:
-            stale.unpersist(blocking=False)
-    cells = extract_pdf_cells(binary_files).persist()
-    _live_cells.append(cells)
-
-    # A5: table density gate (get_table_density > 0.25)
-    dense = table_density_filter(
-        cells,
-        group_cols=["doc_filename", "page", "table_idx"],
-        value_cols=["value"],
-        threshold=0.25,
-    )
-
-    # A6: continuation merge — '' titles adopt the last surviving anchor
-    # and drop their repeated header row
-    w = (
-        Window.partitionBy("doc_filename")
-        .orderBy("page", "table_idx")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    is_anchor = F.trim(F.col("table_title")) != ""
-    titled = (
-        dense.withColumn(
-            "effective_title",
-            F.last(
-                F.when(is_anchor, F.col("table_title")), ignorenulls=True
-            ).over(w),
-        )
-        .withColumn(
-            "anchor",
-            F.last(
-                F.when(is_anchor, F.struct("page", "table_idx")),
-                ignorenulls=True,
-            ).over(w),
-        )
-        .filter(F.col("anchor").isNotNull())
-        .filter(is_anchor | (F.col("row_idx") > 0))
-    )
-
-    # A9: rad classification on the merged title
-    rad = titled.withColumn(
-        "ttype", classify_title("effective_title")
-    ).filter(F.col("ttype") == "rad")
-
-    # A10: per-merged-table header mapping — headers are bounded (one
-    # row of cells per table), so resolution is driver-side planning
-    hdr_rows = (
-        rad.filter(is_anchor & (F.col("row_idx") == 0))
-        .select("doc_filename", "anchor", "col_idx", "value")
-        .collect()  # bounded: one header row of cells per table
-    )
-    headers: dict[tuple, dict[int, str]] = {}
-    for r in hdr_rows:
-        key = (r["doc_filename"], r["anchor"]["page"], r["anchor"]["table_idx"])
-        headers.setdefault(key, {})[r["col_idx"]] = r["value"]
-    mapping_rows = []
-    for (fname, apage, atidx), hmap in headers.items():
-        hdr = [hmap.get(i, "") for i in range(max(hmap) + 1)]
-        mapping = resolve_header_mapping(hdr, RAD_CATEGORIES)
-        if (len(mapping) + 2) / 10 < 0.5:
-            continue  # mapped_header too sparse: table contributes no rows
-        for canon, idx in mapping.items():
-            mapping_rows.append((fname, apage, atidx, idx, canon))
-    if not mapping_rows:
-        return spark.createDataFrame(
-            [],
-            "doc_filename string, doc_title string, "
-            + ", ".join(f"{c} string" for c in RAD_CATEGORIES),
-        )
-    mapping_df = spark.createDataFrame(
-        mapping_rows,
-        "doc_filename string, apage int, atidx int, col_idx int,"
-        " canon string",
-    )
-
-    # project mapped columns per table (broadcast plan join + pivot)
-    data = rad.filter(~(is_anchor & (F.col("row_idx") == 0))).select(
-        "doc_filename",
-        "doc_title",
-        F.col("anchor.page").alias("apage"),
-        F.col("anchor.table_idx").alias("atidx"),
-        "page",
-        "table_idx",
-        "row_idx",
-        "col_idx",
-        "value",
-    )
-    recs = (
-        data.join(
-            F.broadcast(mapping_df),
-            ["doc_filename", "apage", "atidx", "col_idx"],
-        )
-        .groupBy(
-            "doc_filename",
-            "doc_title",
-            "apage",
-            "atidx",
-            "page",
-            "table_idx",
-            "row_idx",
-        )
-        .agg(
-            *[
-                F.max(F.when(F.col("canon") == c, F.col("value"))).alias(c)
-                for c in RAD_CATEGORIES
-            ]
-        )
-    )
-
-    # row validity — regime-dependent, see the docstring:
-    # strict: every mapped cell of the row's table must be non-empty
-    # density: >= 3 non-empty mapped cells ((n + 2 constants)/10 >= 0.5)
-    mapped_flags = F.array(
-        *[
-            F.struct(F.lit(c).alias("canon"), F.col(c).alias("v"))
-            for c in RAD_CATEGORIES
-        ]
-    )
-    per_table_mapped = mapping_df.groupBy(
-        "doc_filename", "apage", "atidx"
-    ).agg(F.collect_set("canon").alias("mapped_cats"))
-    flagged = recs.join(
-        F.broadcast(per_table_mapped),
-        ["doc_filename", "apage", "atidx"],
-    )
-    if validity == "strict":
-        valid = flagged.withColumn(
-            "n_bad",
-            F.size(
-                F.filter(
-                    mapped_flags,
-                    lambda s: F.array_contains(
-                        F.col("mapped_cats"), s["canon"]
-                    )
-                    & (s["v"].isNull() | (s["v"] == "")),
-                )
-            ),
-        ).filter(F.col("n_bad") == 0)
-    else:
-        valid = flagged.withColumn(
-            "n_ok",
-            F.size(
-                F.filter(
-                    mapped_flags,
-                    lambda s: F.array_contains(
-                        F.col("mapped_cats"), s["canon"]
-                    )
-                    & s["v"].isNotNull()
-                    & (s["v"] != ""),
-                )
-            ),
-        ).filter(F.col("n_ok") >= 3)
-
-    # map_row newline flattening + A14 exact dedup on quote-stripped keys
-    out = valid.select(
-        "doc_filename",
-        "doc_title",
-        *[
-            F.regexp_replace(F.col(c), "\n", " ").alias(c)
-            for c in RAD_CATEGORIES
-        ],
-    )
-    key = F.concat_ws(
-        "\x1f",
-        F.col("doc_filename"),
-        *[
-            F.coalesce(F.translate(F.col(c), "'\"", ""), F.lit("\x00"))
-            for c in RAD_CATEGORIES
-        ],
-    )
-    return (
-        out.withColumn("_key", key).dropDuplicates(["_key"]).drop("_key")
-    )
+    per_file = partial(rad_rows_from_cells, validity=validity)
+    return map_pdf_files(binary_files, per_file, RAD_COLUMNS, RAD_DDL)

@@ -56,9 +56,10 @@ def pdf_real_lattice_goldens(spark: SparkSession, sf_dir: str):
     pure-Python lattice extraction (sources/pdf_lattice.py, inside the
     mapInPandas worker) → density gate → continuation merge → rad
     classification → per-table fuzzy header mapping → CSV-round-trip
-    row validity → exact dedup (operators/rad_pipeline.py — the
-    reference's tables.py get_all_tables + map_header/map_row +
-    main.py:88-106 loader), aggregated to per-file row counts.
+    row validity → exact dedup (operators/rad_pipeline.py, in the same
+    worker — the reference's tables.py get_all_tables +
+    map_header/map_row + main.py:88-106 loader), aggregated to
+    per-file row counts.
 
     The oracle pins the golden counts because the comparison target is
     the reference's own database, not a SQL re-derivation: 28/91/64/16
@@ -68,9 +69,10 @@ def pdf_real_lattice_goldens(spark: SparkSession, sf_dir: str):
     this engine reproduces all five from the raw PDF bytes (2006
     additionally matches all six mapped fields byte-for-byte —
     asserted in tests, where sqlite is available). Scale shape: one
-    partition per file, extraction parallel across files, everything
-    after the cell grid is Catalyst; the two regimes are two branches
-    of one union (each file extracted once)."""
+    partition per file; each file is extracted AND run through the
+    table-grain pipeline in the task that reads it, with no shuffle
+    before the per-file count; the two regimes are two branches of one
+    union over disjoint files (each file extracted once)."""
     from ..operators.rad_pipeline import reference_rad_rows
 
     def branch(golden: dict, validity: str):

@@ -3,9 +3,12 @@
 Reference (tables.py:51-97) runs camelot+Ghostscript per page in a
 single-threaded loop. Spark-first shape: ``binaryFile`` scan → one
 Arrow-batched ``mapInPandas`` stage that runs the extraction library per
-file and emits the RAW_CELLS_SCHEMA cell grid (doc, page, table, row, col,
-value) — the whole downstream pipeline (density gates, classification,
-header mapping, dedup) is then pure Catalyst.
+file. ``extract_pdf_cells`` emits the RAW_CELLS_SCHEMA cell grid (doc,
+page, table, row, col, value); ``map_pdf_files`` hands each file's cells
+to a per-file function in the same task instead, which is how
+operators/rad_pipeline.py runs the whole table-grain pipeline (density
+gate, continuation merge, classification, header mapping, validity,
+dedup) without a shuffle or a second job.
 
 camelot / pdfminer / PyPDF2 are NOT in this container, so the extractor is
 pluggable: pass ``extractor=`` (bytes → list of cell tuples). Without one,
@@ -168,10 +171,17 @@ def _lattice_fallback() -> Extractor:
     return lattice_extractor
 
 
-def extract_pdf_cells(
-    binary_files: DataFrame, extractor: Extractor | None = None
+def map_pdf_files(
+    binary_files: DataFrame,
+    per_file: Callable[[str, list[tuple]], list[tuple]],
+    columns: list[str],
+    ddl: str,
+    extractor: Extractor | None = None,
 ) -> DataFrame:
-    """binaryFile rows (path, content, ...) → RAW_CELLS cell grid."""
+    """binaryFile rows (path, content, ...) → ``per_file(filename, cells)``
+    rows, one ``mapInPandas`` pass: each file is extracted and mapped in
+    the task that read it. ``cells`` are the extractor's tuples;
+    ``columns``/``ddl`` describe the rows ``per_file`` returns."""
     ex = extractor or _camelot_extractor() or _lattice_fallback()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -179,12 +189,20 @@ def extract_pdf_cells(
             rows: list[tuple] = []
             for path, content in zip(pdf["path"], pdf["content"]):
                 fname = str(path).rsplit("/", 1)[-1]
-                if ex is None:
-                    continue  # graceful degrade: toolchain absent → skip file
-                for (title, page, tidx, ttitle, ridx, cidx, val) in ex(
-                    fname, bytes(content)
-                ):
-                    rows.append((fname, title, page, tidx, ttitle, ridx, cidx, val))
-            yield pd.DataFrame(rows, columns=CELL_COLUMNS)
+                rows.extend(per_file(fname, ex(fname, bytes(content))))
+            yield pd.DataFrame(rows, columns=columns)
 
-    return binary_files.select("path", "content").mapInPandas(run, schema=CELL_DDL)
+    return binary_files.select("path", "content").mapInPandas(run, schema=ddl)
+
+
+def _with_filename(fname: str, cells: list[tuple]) -> list[tuple]:
+    return [(fname, *cell) for cell in cells]
+
+
+def extract_pdf_cells(
+    binary_files: DataFrame, extractor: Extractor | None = None
+) -> DataFrame:
+    """binaryFile rows (path, content, ...) → RAW_CELLS cell grid."""
+    return map_pdf_files(
+        binary_files, _with_filename, CELL_COLUMNS, CELL_DDL, extractor
+    )

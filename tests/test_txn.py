@@ -138,3 +138,64 @@ def test_committed_ops_ledger(spark, root):
     commit(spark, root, _base(spark), "create", expected_version=None)
     commit(spark, root, _base(spark), "batch_0", expected_version=0)
     assert committed_ops(root) == {"create", "batch_0"}
+
+
+def _counted_updates(spark, acc):
+    """Updates whose key passes through a Python UDF that counts its
+    calls, so each evaluation of the batch shows in `acc`."""
+
+    @F.udf("int")
+    def counted(k):
+        acc.add(1)
+        return k
+
+    raw = spark.createDataFrame(
+        [(1, "a", 111), (4, "d", 40)], "k0 int, seg string, v int"
+    )
+    return raw.select(counted("k0").alias("k"), "seg", "v")
+
+
+@pytest.mark.parametrize("race", [False, True], ids=["no_conflict", "retry"])
+def test_merge_evaluates_updates_once_per_commit(spark, root, monkeypatch, race):
+    from rad_database_parse_spark.catalog import txn
+
+    commit(spark, root, _base(spark), "create", expected_version=None)
+    if race:
+        # a rival publishes the version this merge was derived from after
+        # the merge staged its data: the merge must retry on the batch it
+        # already evaluated
+        real_commit = txn.commit
+
+        def racing_commit(spark, root, df, op, expected_version):
+            if latest_version(root) == 0:
+                real_commit(spark, root, _base(spark), "rival", 0)
+            return real_commit(spark, root, df, op, expected_version)
+
+        monkeypatch.setattr(txn, "commit", racing_commit)
+    acc = spark.sparkContext.accumulator(0)
+    version = merge_upsert_txn(spark, root, _counted_updates(spark, acc), "k")
+    assert version == (2 if race else 1)
+    assert acc.value == 2  # two update rows, each evaluated once
+    final = {r.k: r.v for r in read_snapshot(spark, root).collect()}
+    assert final == {1: 111, 2: 20, 3: 30, 4: 40}
+
+
+def test_merge_leaves_no_cache_and_keeps_the_callers(spark, root):
+    from pyspark import StorageLevel
+
+    commit(spark, root, _base(spark), "create", expected_version=None)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    upd = spark.createDataFrame([(1, "a", 111)], "k int, seg string, v int")
+    merge_upsert_txn(spark, root, upd, "k")
+    assert jsc.getPersistentRDDs().size() == before
+    assert upd.storageLevel == StorageLevel.NONE
+
+    cached = spark.createDataFrame([(2, "b", 222)], "k int, seg string, v int")
+    cached.persist()
+    try:
+        merge_upsert_txn(spark, root, cached, "k")
+        assert cached.storageLevel != StorageLevel.NONE
+        assert jsc.getPersistentRDDs().size() == before + 1
+    finally:
+        cached.unpersist()
