@@ -4,6 +4,17 @@ All reads are plain ``spark.read.parquet`` so Catalyst's vectorized reader,
 predicate pushdown, and column pruning apply. Writers partition by the given
 keys so downstream queries get partition pruning (the Spark replacement for
 the reference's table-per-category design, database.py:244-251).
+
+Schema inference is a Spark job (a footer merge over the input files), and
+a registry query reads the same unchanged testdata files many times. So
+``load_table`` infers each file's schema once per file version: the
+module-level memo ``_SCHEMAS`` maps a path to ``(fingerprint, schema)``,
+where the fingerprint is ``(st_ino, st_size, st_mtime_ns)`` of the file
+(or those and the relative name of every file under a directory path)
+plus the values of the confs in ``_SCHEMA_CONFS``. A hit reads with the
+memoized schema and launches no job; a changed file or conf re-infers and
+replaces the entry, so drift still reaches ``assert_testdata_schema``. A
+path ``os.stat`` cannot see (a non-local URI) is inferred on every read.
 """
 
 from __future__ import annotations
@@ -12,6 +23,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TESTDATA_TABLES = [
     "region",
@@ -63,15 +75,66 @@ def normalize_timestamps(df: DataFrame, nano_cols: list[str] | None = None) -> D
     return df
 
 
+# The confs that change what parquet schema inference returns for the same
+# files; each is part of a memo entry's fingerprint.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# path -> (fingerprint, inferred schema); at most one entry per path.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _fingerprint(spark: SparkSession, path: str) -> tuple | None:
+    """The file version and inference confs a schema was inferred under;
+    None when the path is not on the local file system."""
+    try:
+        if os.path.isdir(path):
+            files = []
+            for dirpath, dirnames, filenames in os.walk(path):
+                dirnames.sort()
+                for fn in sorted(filenames):
+                    full = os.path.join(dirpath, fn)
+                    st = os.stat(full)
+                    files.append(
+                        (os.path.relpath(full, path), st.st_ino, st.st_size, st.st_mtime_ns)
+                    )
+            stats = tuple(files)
+        else:
+            st = os.stat(path)
+            stats = (st.st_ino, st.st_size, st.st_mtime_ns)
+    except OSError:
+        return None
+    return stats, tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only when the
+    file or an inference conf changed since the last read of `path`."""
+    fp = _fingerprint(spark, path)
+    hit = _SCHEMAS.get(path)
+    if fp is not None and hit is not None and hit[0] == fp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if fp is not None:
+        _SCHEMAS[path] = (fp, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table; Catalyst prunes columns/filters at the scan.
     Timestamp columns are normalized to TIMESTAMP whatever physical type the
-    current testdata generation uses (see normalize_timestamps)."""
+    current testdata generation uses (see normalize_timestamps). The
+    parquet schema is inferred once per file version (see ``_SCHEMAS``)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     nano_cols = NANO_TS_COLUMNS.get(name, [])
     if nano_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return normalize_timestamps(spark.read.parquet(path), nano_cols)
+    return normalize_timestamps(_read_parquet(spark, path), nano_cols)
 
 
 # Logical schema each testdata table must present AFTER normalization —

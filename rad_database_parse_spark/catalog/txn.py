@@ -10,10 +10,14 @@ data files, committed with an atomic create-if-absent):
 
 - A table is a directory: ``data/<commit-uuid>/*.parquet`` (immutable once
   written) + ``_manifests/v{N:010d}.json`` listing exactly the data dirs
-  that make up version N.
-- Readers resolve the highest manifest and read only its file list —
-  snapshot isolation for free; any historical version stays readable
-  (time travel) until explicitly vacuumed.
+  that make up version N, and the snapshot's schema (``"schema"``, the
+  committed DataFrame's ``schema.jsonValue()``).
+- Readers resolve the highest manifest and read only its file list, with
+  the manifest's schema, so a read launches no schema-inference job
+  (the schema lives in the log, as in Delta/Iceberg) — snapshot
+  isolation for free; any historical version stays readable (time
+  travel) until explicitly vacuumed. A manifest without a ``"schema"``
+  key (written before the log carried one) is read by inference.
 - Writers stage data first, then publish with ``O_CREAT|O_EXCL`` on the
   next manifest name. Exactly one concurrent writer can win a version;
   losers see ``CommitConflict`` and retry against the fresh snapshot
@@ -35,6 +39,7 @@ import uuid
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class CommitConflict(Exception):
@@ -67,13 +72,17 @@ def read_snapshot(
 ) -> DataFrame:
     """The table as of `version` (default: latest). Reads exactly the
     manifest's data dirs — concurrent commits after the manifest is
-    resolved are invisible (snapshot isolation)."""
+    resolved are invisible (snapshot isolation). The manifest's schema
+    is used as given, so no job infers it from the data files."""
     v = latest_version(root) if version is None else version
     if v is None:
         raise FileNotFoundError(f"uninitialized txn table: {root}")
     with open(_manifest_path(root, v)) as f:
         manifest = json.load(f)
-    return spark.read.parquet(*manifest["files"])
+    reader = spark.read
+    if "schema" in manifest:
+        reader = reader.schema(StructType.fromJson(manifest["schema"]))
+    return reader.parquet(*manifest["files"])
 
 
 def commit(
@@ -100,6 +109,7 @@ def commit(
         "parent": expected_version,
         "op": op,
         "files": [data_dir],
+        "schema": df.schema.jsonValue(),
     }
     path = _manifest_path(root, new_version)
     try:
@@ -142,9 +152,12 @@ def vacuum(root: str, keep_last: int = 1) -> dict:
     expired version stops working; the head and its files are untouched).
     Order matters for crash safety: manifests are removed FIRST, so a
     crash mid-vacuum can orphan data files (harmless, re-vacuumable) but
-    can never leave a manifest pointing at deleted data."""
+    can never leave a manifest pointing at deleted data. `keep_last` must
+    be at least 1: the head version is never expired."""
     import shutil
 
+    if keep_last < 1:
+        raise ValueError(f"keep_last must be >= 1, got {keep_last}")
     versions = list_versions(root)
     if not versions:
         return {"removed_versions": 0, "removed_data_dirs": 0}

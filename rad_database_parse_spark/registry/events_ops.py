@@ -588,34 +588,40 @@ def datetime_functions(spark: SparkSession, sf_dir: str):
 def funnel_view_click_purchase(spark: SparkSession, sf_dir: str):
     """Ordered-sequence funnel: users who viewed, then clicked strictly
     after their first view, then purchased strictly after that click.
-    Each stage is one agg + one join keyed on user_id — at scale the three
-    stages reuse one hash partitioning on user_id (no re-shuffle between
-    them), which is the property that matters when events is the 100 TB
-    table."""
-    e = t(spark, sf_dir, "events")
-    v = (
-        e.filter(F.col("event_type") == "view")
+    The stage times are successive window columns over one user_id
+    partition (t_view, then the first click after it, then the first
+    purchase after that), so one shuffle and one sort feed all three
+    stages and the per-user fold that follows, which keeps that
+    partitioning; only the final three counts gather to one task. A user
+    whose view events all have a null ts still counts as viewed (the
+    oracle's COUNT(*) over its GROUP BY), with a null t_view that no
+    click follows."""
+    w = Window.partitionBy("user_id")
+    typ, ts = F.col("event_type"), F.col("ts")
+
+    def first(event_type, after=None):
+        hit = typ == event_type
+        if after is not None:
+            hit = hit & (ts > F.col(after))
+        return F.min(F.when(hit, ts)).over(w)
+
+    per_user = (
+        t(spark, sf_dir, "events")
+        .filter(typ.isin("view", "click", "purchase"))
+        .withColumn("t_view", first("view"))
+        .withColumn("t_click", first("click", "t_view"))
+        .withColumn("t_purchase", first("purchase", "t_click"))
         .groupBy("user_id")
-        .agg(F.min("ts").alias("t_view"))
+        .agg(
+            F.max(typ == "view").alias("viewed"),
+            F.max("t_click").alias("t_click"),
+            F.max("t_purchase").alias("t_purchase"),
+        )
     )
-    c = (
-        e.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("ts") > F.col("t_view"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_click"))
-    )
-    p = (
-        e.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("ts") > F.col("t_click"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_purchase"))
-    )
-    return (
-        v.agg(F.count("*").alias("n_viewed"))
-        .crossJoin(c.agg(F.count("*").alias("n_clicked_after_view")))
-        .crossJoin(p.agg(F.count("*").alias("n_purchased_after_click")))
+    return per_user.agg(
+        F.count_if("viewed").alias("n_viewed"),
+        F.count("t_click").alias("n_clicked_after_view"),
+        F.count("t_purchase").alias("n_purchased_after_click"),
     )
 
 

@@ -469,7 +469,7 @@ def orders_cube_view_selection_greedy(spark: SparkSession, sf_dir: str):
     EAGER BUILDER (ADVICE r12): like customer_coverage_greedy_brands,
     constructing this op's DataFrame runs the fact-scale CUBE job at
     build time (the collect feeds the driver-side greedy), so plan-only
-    sweeps (e.g. tools/plan_audit_r12.py) pay the full pass per build.
+    sweeps (e.g. an explain-only audit) pay the full pass per build.
     bench.py times the builder inside the query window, so the bench
     timing is honest."""
     o = t(spark, sf_dir, "orders")

@@ -32,7 +32,7 @@ _GC_FLAG = "-XX:+UseParallelGC"
 # LIFECYCLE (ADVICE r12): the hook is read only when a session is BUILT —
 # get_session returns an already-active session untouched, so an
 # in-process arm flip is a silent no-op. A/B tools must run each arm in
-# a fresh subprocess (tools/ab_r12_conf.py does).
+# a fresh subprocess.
 _CONF_ENV = "SPARK_GRAFT_CONF"
 
 
@@ -64,8 +64,8 @@ def _merge_gc_flag(opts: str) -> str:
     names a collector or SPARK_GRAFT_STOCK_GC=1 asks for JVM defaults.
 
     Shipped round 12 from the four-arm interleaved full-battery GC A/B
-    (tools/ab_r12_gc.py, BENCH_AB_r12_*.json; decision rule
-    pre-registered in that file): vs stock G1, ParallelGC cut
+    (BENCH_AB_r12_*.json; decision rule pre-registered before the
+    runs): vs stock G1, ParallelGC cut
     battery-concurrent ("organic") GC 21.5→5.3s (-75-80%, consistent in
     all four parallel-arm runs) and won battery min-of-2 342.0s vs
     429.2s (-20%) with headline not worse (19.2 vs 22.4 min-of-2);
@@ -144,7 +144,7 @@ def get_session(
         # predecessors evict its fragments under the 100-entry cache)
         # and shipped maxEntries=1000 + -XX:ReservedCodeCacheSize=512m.
         # The r11 interleaved FULL-battery A/B through bench.py
-        # subprocesses (tools/ab_r11_config.py, BENCH_AB_r11_*.json)
+        # subprocesses (BENCH_AB_r11_*.json)
         # reversed that at battery grain: headline tied (30.7 vs 30.3s
         # min-of-2), but the full 460-query battery ran 553s shipped vs
         # 462s stock (~17% faster stock), the losses concentrated in

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -27,3 +28,23 @@ def spark_session_holder():
     """Alias fixture for hypothesis-driven tests (hypothesis forbids function-
     scoped fixtures under @given; session scope is fine)."""
     return get_session(app_name="rad_database_parse_spark_tests")
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` under a fresh job group and returns
+    ``(number of Spark jobs it launched, fn's result)``."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count_jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job-start events reach the status store asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return run

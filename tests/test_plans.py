@@ -145,9 +145,12 @@ def test_funnel_reuses_user_partitioning(spark, sf_dir):
     )
 
     plan = formatted_plan(funnel_view_click_purchase(spark, sf_dir))
-    # stages join/aggregate on user_id throughout; no sort-merge join
-    # should appear at this size and no more than the expected exchanges
-    assert "SortMergeJoin" not in plan
+    # all three stages and the per-user fold share one user_id shuffle;
+    # the only other exchange gathers the final counts
+    tree = plan.split("\n\n")[0]
+    assert tree.count("Exchange") == 2
+    assert plan.count("hashpartitioning(") == 1
+    assert "Join" not in tree
 
 
 def test_decontaminate_broadcasts_benchmark(spark, sf_dir):

@@ -1,14 +1,14 @@
 """Round-12 rescan-fix plan guard.
 
-The r12 plan audit (tools/plan_audit_r12.py) flagged seven ops whose
-bounded intermediate fanned out into many branches, re-embedding the
-fact-grain build in the STATIC plan (26-132 parquet scans). Isolated
-interleaved timing at sf0.1 then showed that for six of them AQE's
-runtime exchange reuse already elided the duplicate work, and adding a
-persist + eager count made them SLOWER (the r10 twfe lesson: splitting
-one pipelined lazy plan into sequential jobs costs more than the
-exchanges it saves) — those six were measured and REVERTED, recorded in
-OPTIMIZATION_r12.md §2.
+The r12 plan audit (an explain("formatted") sweep of every registry op)
+flagged seven ops whose bounded intermediate fanned out into many
+branches, re-embedding the fact-grain build in the STATIC plan (26-132
+parquet scans). Isolated interleaved timing at sf0.1 then showed that for
+six of them AQE's runtime exchange reuse already elided the duplicate
+work, and adding a persist + eager count made them SLOWER (the r10 twfe
+lesson: splitting one pipelined lazy plan into sequential jobs costs more
+than the exchanges it saves) — those six were measured and REVERTED,
+recorded in OPTIMIZATION_r12.md §2.
 
 The one real offender was `orders_cube_view_selection_greedy`: its
 8-row lattice persist FAILED CacheManager substitution (mask predicates

@@ -10,7 +10,7 @@
    CacheManager); the gate/bench hygiene sweep must release both.
 3. ``_merge_gc_flag``: the r12 ParallelGC default must never clobber
    an explicit collector choice and must honor the
-   SPARK_GRAFT_STOCK_GC=1 revert knob (tools/ab_r12_gc.py).
+   SPARK_GRAFT_STOCK_GC=1 revert knob.
 """
 
 from __future__ import annotations
