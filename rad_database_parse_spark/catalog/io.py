@@ -77,8 +77,9 @@ def normalize_timestamps(df: DataFrame, nano_cols: list[str] | None = None) -> D
 
 # The confs that change what parquet schema inference returns for the same
 # files; each is part of a memo entry's fingerprint.
+_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 _SCHEMA_CONFS = (
-    "spark.sql.legacy.parquet.nanosAsLong",
+    _NANOS_CONF,
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
@@ -132,8 +133,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     parquet schema is inferred once per file version (see ``_SCHEMAS``)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     nano_cols = NANO_TS_COLUMNS.get(name, [])
-    if nano_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # get_session sets the conf at build, so tables read before the first
+    # `events` keep their _SCHEMAS fingerprint; this write is for sessions
+    # built elsewhere
+    if nano_cols and spark.conf.get(_NANOS_CONF) != "true":
+        spark.conf.set(_NANOS_CONF, "true")
     return normalize_timestamps(_read_parquet(spark, path), nano_cols)
 
 

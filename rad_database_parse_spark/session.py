@@ -22,7 +22,6 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 _JVM_OPTS_KEY = "spark.driver.extraJavaOptions"
-_CODE_CACHE_FLAG = "-XX:ReservedCodeCacheSize=512m"
 _GC_FLAG = "-XX:+UseParallelGC"
 # A/B hook (round 12 optimization): semicolon-separated `key=value` pairs
 # applied LAST, so an interleaved bench arm can flip any SQL/core conf
@@ -64,8 +63,9 @@ def _merge_gc_flag(opts: str) -> str:
     names a collector or SPARK_GRAFT_STOCK_GC=1 asks for JVM defaults.
 
     Shipped round 12 from the four-arm interleaved full-battery GC A/B
-    (BENCH_AB_r12_*.json; decision rule pre-registered before the
-    runs): vs stock G1, ParallelGC cut
+    (per-arm results BENCH_AB_r12_*.json are in git history up to commit
+    27a9fa0; decision rule pre-registered before the runs): vs stock
+    G1, ParallelGC cut
     battery-concurrent ("organic") GC 21.5→5.3s (-75-80%, consistent in
     all four parallel-arm runs) and won battery min-of-2 342.0s vs
     429.2s (-20%) with headline not worse (19.2 vs 22.4 min-of-2);
@@ -86,23 +86,6 @@ def _merge_gc_flag(opts: str) -> str:
     if re.search(r"-XX:[+-]Use\w*GC", opts):
         return opts  # never clobber an explicit collector choice
     return f"{opts} {_GC_FLAG}".strip()
-
-
-def _merge_driver_java_options(
-    extra_conf: dict[str, str] | None, env_opts: str = ""
-) -> tuple[str, dict[str, str]]:
-    """Merge the code-cache flag into caller/env driver JVM options.
-
-    Returns ``(merged_extraJavaOptions, remaining_extra_conf)``.
-    Precedence: an ``extra_conf`` extraJavaOptions wins over the env
-    value; the ReservedCodeCacheSize flag is appended only when no
-    explicit ReservedCodeCacheSize is already present (ADVICE r10 —
-    never clobber external options, never get silently clobbered)."""
-    remaining = dict(extra_conf or {})
-    caller_opts = remaining.pop(_JVM_OPTS_KEY, env_opts)
-    if "-XX:ReservedCodeCacheSize" not in caller_opts:
-        caller_opts = f"{caller_opts} {_CODE_CACHE_FLAG}".strip()
-    return caller_opts, remaining
 
 
 def get_session(
@@ -136,40 +119,18 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Codegen caching is STOCK (Janino cache 100 entries, default
-        # 240 MB code cache) — REVERTED in round 11 after the
-        # driver-lifecycle A/B the r10 verdict demanded (item 2c).
-        # History: r10 root-caused a real recompile thrash (minhash's
-        # 12-join plan reads 5.1-5.4s fresh but 6.9-7.5s after ~21
-        # predecessors evict its fragments under the 100-entry cache)
-        # and shipped maxEntries=1000 + -XX:ReservedCodeCacheSize=512m.
-        # The r11 interleaved FULL-battery A/B through bench.py
-        # subprocesses (BENCH_AB_r11_*.json)
-        # reversed that at battery grain: headline tied (30.7 vs 30.3s
-        # min-of-2), but the full 460-query battery ran 553s shipped vs
-        # 462s stock (~17% faster stock), the losses concentrated in
-        # LATE families (r7j-r8 up to 2x) — the signature of JIT/GC
-        # pressure from 1000 retained generated classes, while the
-        # minhash recompile the big cache was bought for costs only
-        # 0.27s/run under stock. SPARK_GRAFT_BIG_CODEGEN_CACHE=1
-        # re-enables the r10 config for future A/Bs.
+        # The nine olap_mix queries generate ~100-130 classes per pass; at
+        # Spark's default of 100 entries every warm pass evicted and
+        # recompiled nearly all of them. 256 holds that working set twice.
+        .config("spark.sql.codegen.cache.maxEntries", "256")
+        # read the TIMESTAMP(NANOS) columns of some testdata generations as
+        # long (catalog.io.normalize_timestamps converts them)
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    big_cache = os.environ.get("SPARK_GRAFT_BIG_CODEGEN_CACHE") == "1"
-    if big_cache:
-        builder = builder.config("spark.sql.codegen.cache.maxEntries", "1000")
-        # the 1000-entry cache pins enough JIT'd code to exhaust JDK17's
-        # default 240 MB ReservedCodeCacheSize mid-battery (JIT then
-        # disables); 512m keeps it compiled. MERGED with external driver
-        # JVM options, never clobbering them (ADVICE r10).
-        caller_opts, merged = _merge_driver_java_options(
-            extra_conf, os.environ.get("SPARK_DRIVER_EXTRA_JAVA_OPTIONS", "")
-        )
-    else:
-        merged = dict(extra_conf or {})
-        caller_opts = merged.pop(
-            _JVM_OPTS_KEY,
-            os.environ.get("SPARK_DRIVER_EXTRA_JAVA_OPTIONS", ""),
-        )
+    merged = dict(extra_conf or {})
+    caller_opts = merged.pop(
+        _JVM_OPTS_KEY, os.environ.get("SPARK_DRIVER_EXTRA_JAVA_OPTIONS", "")
+    )
     caller_opts = _merge_gc_flag(caller_opts)
     if caller_opts:
         builder = builder.config(_JVM_OPTS_KEY, caller_opts)

@@ -48,3 +48,18 @@ def count_jobs(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
     return run
+
+
+@pytest.fixture()
+def count_compiles(spark):
+    """``count_compiles(fn)`` runs ``fn()`` and returns ``(number of
+    generated classes Janino compiled meanwhile, fn's result)``; a class
+    served from the codegen cache is not compiled again."""
+    timer = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run(fn):
+        before = timer.getCount()
+        out = fn()
+        return timer.getCount() - before, out
+
+    return run

@@ -122,3 +122,26 @@ def test_flipping_an_inference_conf_infers_again(spark, one_table):
     finally:
         for k, v in before.items():
             spark.conf.set(k, v)
+
+
+def test_events_read_leaves_other_tables_memoized(spark, sf_dir, count_jobs, monkeypatch):
+    import rad_database_parse_spark.catalog.io as io_mod
+
+    monkeypatch.setattr(io_mod, "_SCHEMAS", {})
+    before = spark.conf.get(NANOS_CONF)
+    assert before == "true"  # get_session sets it when it builds the session
+    load_table(spark, sf_dir, "lineitem")
+    load_table(spark, sf_dir, "events")
+    jobs, _ = count_jobs(lambda: load_table(spark, sf_dir, "lineitem"))
+    assert jobs == 0
+    assert spark.conf.get(NANOS_CONF) == before
+
+
+def test_events_read_sets_nanos_conf_on_a_session_built_elsewhere(spark, sf_dir):
+    spark.conf.set(NANOS_CONF, "false")
+    try:
+        e = load_table(spark, sf_dir, "events")
+        assert spark.conf.get(NANOS_CONF) == "true"
+        assert dict(e.dtypes)["ts"] == "timestamp"
+    finally:
+        spark.conf.set(NANOS_CONF, "true")

@@ -1,10 +1,8 @@
 """Session-factory hygiene (ADVICE r10, GC default r12).
 
-1. ``_merge_driver_java_options``: the ReservedCodeCacheSize fix must
-   never clobber externally configured driver JVM options, and an
-   ``extra_conf`` that sets its own ``extraJavaOptions`` must not
-   silently drop the code-cache flag (unless it carries an explicit
-   ReservedCodeCacheSize of its own).
+1. ``get_session`` builds every session with the codegen cache sized to
+   the olap working set (256 entries) and the parquet nanos conf set, and
+   reads only its documented env vars; ``extra_conf`` overrides any conf.
 2. ``clear_caches``: catalog ``clearCache()`` does not release
    RDD-level persists (``localCheckpoint`` blocks live outside the
    CacheManager); the gate/bench hygiene sweep must release both.
@@ -15,18 +13,24 @@
 
 from __future__ import annotations
 
+import os
+from types import SimpleNamespace
+
 from pyspark import StorageLevel
 
 import pytest
 
+import rad_database_parse_spark.session as session_mod
 from rad_database_parse_spark.session import (
-    _CODE_CACHE_FLAG,
     _GC_FLAG,
     _env_conf,
-    _merge_driver_java_options,
     _merge_gc_flag,
     clear_caches,
+    get_session,
 )
+
+CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
+JVM_OPTS = "spark.driver.extraJavaOptions"
 
 
 def test_env_conf_parses_pairs(monkeypatch):
@@ -80,42 +84,6 @@ def test_gc_flag_stock_knob_reverts(monkeypatch):
     assert _merge_gc_flag("-Xss4m") == "-Xss4m"
 
 
-def test_merge_defaults_to_flag_only():
-    opts, remaining = _merge_driver_java_options(None)
-    assert opts == _CODE_CACHE_FLAG
-    assert remaining == {}
-
-
-def test_merge_appends_to_env_options():
-    opts, _ = _merge_driver_java_options(None, "-Xss4m -Dfoo=bar")
-    assert opts.startswith("-Xss4m -Dfoo=bar ")
-    assert opts.endswith(_CODE_CACHE_FLAG)
-
-
-def test_merge_extra_conf_wins_over_env_but_keeps_flag():
-    opts, remaining = _merge_driver_java_options(
-        {"spark.driver.extraJavaOptions": "-Xmx1g", "other.key": "v"},
-        "-Xss4m",
-    )
-    assert "-Xss4m" not in opts  # extra_conf takes precedence over env
-    assert opts == f"-Xmx1g {_CODE_CACHE_FLAG}"
-    # the consumed extraJavaOptions entry must not be re-applied later
-    assert remaining == {"other.key": "v"}
-
-
-def test_merge_respects_explicit_code_cache_size():
-    opts, _ = _merge_driver_java_options(
-        {"spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=256m"}
-    )
-    assert opts == "-XX:ReservedCodeCacheSize=256m"
-    assert "512m" not in opts
-
-
-def test_merge_env_explicit_code_cache_size_respected():
-    opts, _ = _merge_driver_java_options(None, "-XX:ReservedCodeCacheSize=1g")
-    assert opts == "-XX:ReservedCodeCacheSize=1g"
-
-
 def test_clear_caches_releases_localcheckpoint_blocks(spark):
     df = spark.range(100).localCheckpoint(eager=True)
     df.count()
@@ -124,3 +92,88 @@ def test_clear_caches_releases_localcheckpoint_blocks(spark):
     assert spark.sparkContext._jsc.getPersistentRDDs().size() > 0
     clear_caches(spark)
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+
+
+class _FakeBuilder:
+    """Records the confs ``get_session`` sets, in order."""
+
+    def __init__(self):
+        self.conf = []
+
+    def appName(self, _):
+        return self
+
+    def master(self, _):
+        return self
+
+    def config(self, k, v):
+        self.conf.append((k, v))
+        return self
+
+    def getOrCreate(self):
+        return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda _: None))
+
+
+class _RecordingEnv(dict):
+    def __init__(self, env):
+        super().__init__(env)
+        self.read = set()
+
+    def get(self, k, default=None):
+        self.read.add(k)
+        return super().get(k, default)
+
+    def __getitem__(self, k):
+        self.read.add(k)
+        return super().__getitem__(k)
+
+
+@pytest.fixture()
+def fake_build(monkeypatch):
+    """``fake_build(**get_session_kwargs)`` runs ``get_session`` as if no
+    session were active; returns ``(confs set, last value wins; env vars
+    read)``."""
+
+    def run(**kwargs):
+        builder = _FakeBuilder()
+        env = _RecordingEnv(os.environ)
+        monkeypatch.setattr(session_mod, "os", SimpleNamespace(environ=env))
+        monkeypatch.setattr(
+            session_mod,
+            "SparkSession",
+            SimpleNamespace(getActiveSession=lambda: None, builder=builder),
+        )
+        get_session(**kwargs)
+        return dict(builder.conf), env.read
+
+    return run
+
+
+def test_session_conf_sizes_the_codegen_cache(spark):
+    assert spark.conf.get(CODEGEN_CACHE) == "256"
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+
+
+def test_get_session_reads_only_its_documented_env(fake_build, monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CONF", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_STOCK_GC", raising=False)
+    monkeypatch.setenv("SPARK_DRIVER_EXTRA_JAVA_OPTIONS", "-Xss4m")
+    conf, read = fake_build()
+    assert conf[CODEGEN_CACHE] == "256"
+    assert conf[JVM_OPTS] == f"-Xss4m {_GC_FLAG}"
+    assert read == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_DRIVER_MEM",
+        "SPARK_DRIVER_EXTRA_JAVA_OPTIONS",
+        "SPARK_GRAFT_STOCK_GC",
+        "SPARK_GRAFT_CONF",
+    }
+
+
+def test_extra_conf_overrides_session_defaults(fake_build, monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_STOCK_GC", raising=False)
+    monkeypatch.setenv("SPARK_DRIVER_EXTRA_JAVA_OPTIONS", "-Xss4m")
+    conf, _ = fake_build(extra_conf={CODEGEN_CACHE: "1000", JVM_OPTS: "-Xmx1g"})
+    assert conf[CODEGEN_CACHE] == "1000"
+    # extra_conf options replace the env's; the GC flag is still merged in
+    assert conf[JVM_OPTS] == f"-Xmx1g {_GC_FLAG}"
