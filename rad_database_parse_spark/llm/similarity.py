@@ -228,8 +228,9 @@ def ivf_cosine_topk(
     The r3 bench number (1.77s vs r2's 1.23s) was VM speed spread, not a
     re-plan: the r5 VM measures 1.45x slower than r3's median-over-identical-
     code, yet IVF timed 1.81s there — i.e. ~1.25s in r3-machine terms, right
-    at the r2 figure. bench.py now emits `calib_sec` so future rounds can
-    normalize before flagging drift."""
+    at the r2 figure. The legacy battery that emitted `calib_sec` for that
+    normalization is in git history up to commit 6582a12; perfbench's
+    paired, alternating runs now cancel VM drift instead."""
     inv = (
         ivf_assign(corpus, centroids, 1, id_col, vec_col, round_digits)
         .select(

@@ -27,11 +27,11 @@ constrains only the row's OWN mapped columns — a subset match against
 every previously-inserted row of the same file. A row from a
 subset-mapped table that agrees with an earlier, more-fully-mapped row
 on just its own columns would be dropped by the reference but kept
-here. tools/dedup_semantics_probe.py replays BOTH semantics over all
-10 contributing compendium PDFs: per-file counts are IDENTICAL on
-every file (no table-pair in the corpus has a containment-related
-mapped set with colliding values), so the simpler whole-key dedup is
-kept.
+here. A one-off probe replayed BOTH semantics over all 10
+contributing compendium PDFs (the probe is in git history up to commit
+6582a12): per-file counts are IDENTICAL on every file (no table-pair
+in the corpus has a containment-related mapped set with colliding
+values), so the simpler whole-key dedup is kept.
 """
 
 from __future__ import annotations

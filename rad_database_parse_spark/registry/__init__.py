@@ -2,7 +2,9 @@
 
 Each entry pairs a Spark query builder ``(spark, sf_dir) -> DataFrame`` with
 an equivalent DuckDB oracle SQL string (or None for non-SQL-expressible
-operators, which the driver checks rows-only).
+operators, which ``tools/check_correctness.py`` checks rows-only). Names
+and ``QueryDef``s are the contract; the order ``all_queries()`` returns
+them in is not.
 
 Float-parity policy (what makes hash-compare possible across engines):
 - money-like 2-decimal columns are cast to DECIMAL before +/* aggregation —
@@ -43,728 +45,10 @@ def register(name: str, oracle: str | None):
     return deco
 
 
-# The driver's correctness gate checks the FIRST 50 queries per round, so the
-# window rotates until every query has a driver-green row. Round 1 covered
-# core_relational + tpch_deep (+ math/conditional/string scalar suites);
-# round 2 covered llm_ops (25) + events_ops positions 26-50 (events_ops has
-# 26 queries — stream_interval_outer_join at position 51 missed the cut).
-# Round 3's window is pinned EXPLICITLY by name below: the entire never-
-# checked etl_ops + sampling_profile families, the hash/bitwise/try scalar
-# suites, stream_interval_outer_join, the two re-check targets
-# (pivot_multi_agg — r1 fail since fixed; multimodal decode pair — r2 err
-# since made hash-friendly), and 13 of the 22 never-checked pipeline_ops.
-# The 9 residual pipeline_ops queries plus every query ADDED in round 3
-# form the round-4 window (positions 51+ this round, 1+ next); SURVEY §8
-# carries the full query→round coverage table. The order
-# is imposed here by explicit list (not import side-effect order) so an
-# earlier direct import of any registry module cannot shuffle the window.
-_WINDOW_R3 = [
-    # etl_ops — the reference's own §2A surface, never driver-checked (25)
-    "normalize_strings",
-    "classify_titles",
-    "fuzzy_header_map",
-    "parse_measure",
-    "density_row_filter",
-    "abbrev_extract",
-    "abbrev_expand",
-    "continuation_propagate_titles",
-    "update_where_segment",
-    "delete_limit_lowest",
-    "merge_upsert_customers",
-    "scd2_customer_history",
-    "nearest_title_join",
-    "csv_roundtrip_region",
-    "json_roundtrip_orders",
-    "etl_pipeline_end_to_end",
-    "abbrev_extract_udtf",
-    "pdf_datasource_stub_grid",
-    "text_roundtrip_doclines",
-    "orc_roundtrip_supplier",
-    "xml_roundtrip_nation",
-    "part_rad_backref",
-    "paper_dim_join",
-    "scd2_pointintime_join",
-    "null_semantics_suite",
-    # sampling / profiling family, never driver-checked (5)
-    "deterministic_sample",
-    "stratified_sample_by_segment",
-    "profile_orders",
-    "histogram_totalprice",
-    "docs_balance_by_lang",
-    # scalar suites without driver rows (math/conditional passed r1) (3)
-    "hash_functions",
-    "bitwise_functions",
-    "try_functions",
-    # missed r2's window by one position (1)
-    "stream_interval_outer_join",
-    # re-checks: r1's one fail (fixed) + r2's two errs (made hashable) (3)
-    "pivot_multi_agg",
-    "multimodal_decode_features",
-    "multimodal_decode_oracle",
-    # pipeline_ops, 13 of 22 — the rest are the r4 window (13)
-    "snapshot_diff_customers",
-    "range_band_join_orders",
-    "rollup_multi_resolution",
-    "docs_pack_sequences",
-    "docs_gopher_filter",
-    "emb_label_centroids",
-    "agg_approx_quantile_check",
-    "emb_lsh_or_amplified",
-    "part_name_neardup",
-    "events_anomaly_zscore",
-    "event_type_transitions",
-    "graph_pagerank_fixedpoint",
-    "sketch_distinct_users",
-]
-
-# Round-4 window: the pipeline_ops residue plus every query REGISTERED from
-# round 3 onward (new queries must be appended here — never left to rest on
-# the local gate alone; positions 51+ this round, 1+ next round).
-_WINDOW_R4 = [
-    "chisq_contingency_cells",
-    "weighted_sample_orders",
-    "lateral_topk_orders",
-    "window_rolling_median",
-    "agg_string_concat_groups",
-    "ntile_decile_stats",
-    "supplier_abc_classification",
-    "orders_seasonality",
-    "events_rfm_segmentation",
-    # new in round 3:
-    "docs_repetition_filter",
-    "stateful_sessionizer_stream",
-    "docs_boilerplate_share",
-    "emb_scalar_quantize",
-    "docs_incremental_neardup",
-    "docs_curation_funnel",
-    "schema_evolution_merge",
-    "dynamic_partition_overwrite",
-    "docs_leakage_safe_split",
-    "events_resample_ffill",
-]
-
-# Round-5 window: positions 1-19 are _WINDOW_R4 — the rotation that never
-# ran in the zero-turn round 4, so these 19 still have no driver row ever —
-# followed by the six queries broken-or-erred at the last driver check
-# (the five TIMESTAMP_NTZ casualties fixed at the loader this round, plus
-# emb_label_centroids made hash-friendly; stateful_sessionizer_stream is
-# already in the _WINDOW_R4 block). New queries registered in round 5 are
-# appended at the end of this list so they get a driver row immediately.
-_WINDOW_R5 = _WINDOW_R4 + [
-    "sessionize_events",
-    "window_range_frame_5min",
-    "stream_interval_outer_join",
-    "emb_label_centroids",
-    # new in round 5:
-    "docs_chunk_dedup",
-    "docs_reservoir_sample_per_lang",
-    "events_rolling_wau",
-    "sketch_hll_daily_merge",
-    "zorder_layout_orders",
-    "emb_pq_quantize",
-    "bloom_prune_semijoin",
-    "dq_expectations_report",
-    "docs_vocab_coverage",
-    "interval_bin_join_events",
-    "docs_setsim_prefix_join",
-    "stream_foreachbatch_upsert",
-    "events_twap_per_user",
-    "array_hof_suite",
-    "part_triangle_counts",
-    "docs_containment_join",
-    "emb_truncated_topk_recall",
-    # round-5c curation/analytics ops (positions 41-48 — still inside the
-    # driver's 50-query window, displacing r3 re-check padding):
-    "docs_cross_source_overlap",
-    "docs_bigram_lm_score",
-    "docs_inverted_index_segments",
-    "part_skyline_pareto",
-    "orders_calendar_densify",
-    "events_attribution_last_touch",
-    "lineitem_winsorized_stats",
-    "events_cms_heavy_hitters",
-    "events_ewma_smoothing",
-    "nation_supplier_hhi",
-]
-
-# Round-6 window seed: _WINDOW_R5 is full (50), so queries registered after
-# it queue here — positions 51+ this round, 1+ next round (the _WINDOW_R4
-# convention). CORRECTNESS_r05 failures get prepended when the file lands.
-_WINDOW_R6 = [
-    "multimodal_frame_sample",
-    "dq_observe_metrics",
-    "arrow_native_net_revenue",
-    "docs_minhash_estimator_error",
-    "emb_ivf_multiprobe_recall",
-    "orders_seasonal_naive_backtest",
-    "docs_lexical_semantic_agreement",
-    "emb_binary_hamming_topk",
-    "orders_benford_digit_test",
-    "events_multitouch_decay_attribution",
-    "basket_part_association",
-    "lineitem_gini_inequality",
-    "customer_survival_curve",
-    "events_type_diversity_simpson",
-    "order_to_ship_latency_profile",
-    "orders_priority_drift_chi2",
-    "events_late_arrival_accounting",
-    # round-5d maintenance/analytics ops (registered after the r5 gate
-    # archive; queue for the next driver window as always):
-    "files_compaction_plan",
-    "events_cusum_changepoint",
-    "events_second_order_transitions",
-    "lineitem_mad_outliers",
-    "orders_ivm_partial_agg_merge",
-    "docs_bm25_topk",
-    "emb_hamming_rerank_cascade",
-    "graph_kcore_decomposition",
-    "gdpr_erasure_cascade",
-    "part_knn_graph_stats",
-    "sql_recursive_hierarchy",
-    "events_active_streaks",
-    "part_brand_ols_slope",
-    "emb_kmeans_lloyd",
-    "orders_cohort_ltv_curve",
-    "docs_ngram_novelty_decay",
-    "supplier_shared_customer_graph",
-    "events_cdc_net_changes",
-    "stream_ivm_rollup_maintenance",
-    "events_funnel_windowed_24h",
-    "join_skew_diagnostics",
-    "events_cep_click_after_view_no_error",
-    "emb_dim_variance_profile",
-    "orders_backlog_sweepline",
-    "udtf_dynamic_split_words",
-    "lineitem_ks_two_sample",
-    "nation_mix_shift_decomposition",
-    "part_laspeyres_price_index",
-    "events_bot_detection_rules",
-    "customer_decile_migration",
-    "lineitem_anova_two_way",
-    "events_diff_in_differences",
-    "docs_bpe_first_merge",
-]
-
-# Round-7 window seed: _WINDOW_R6 is full (exactly 50 — the complete set of
-# queries that have never had a driver CORRECTNESS row), so queries
-# registered in round 6 queue here — positions 51+ this round, 1+ next
-# round. CORRECTNESS_r06 failures get prepended when the file lands.
-_WINDOW_R7: list[str] = [
-    "txn_snapshot_merge_upsert",
-    "txn_time_travel_read",
-    "events_shapley_channel_attribution",
-    "events_ab_cuped_adjustment",
-    "docs_rake_keyphrases",
-    "orders_weighted_percentile_exact",
-    "emb_ivf_pq_adc_topk",
-    "txn_vacuum_retention",
-    "stream_txn_exactly_once_sink",
-    "events_funnel_wilson_ci",
-    "orders_mann_whitney_u",
-    "docs_curriculum_buckets",
-    "emb_label_centroid_drift",
-    "docs_hybrid_rrf_fusion",
-    "pyds_jsonl_roundtrip_nation",
-    "multimodal_audio_frame_energy",
-    "txn_change_data_feed",
-    "docs_minhash_recall_vs_exact",
-    # round-6b continuation ops (registry/round6b_ops.py)
-    "sketch_kmv_set_ops",
-    "orders_gini_best_split_stump",
-    "docs_mixture_sampling_plan",
-    "asof_nearest_event_join",
-    "graph_label_propagation",
-    "docs_kanon_shingle_suppression",
-    "emb_cosine_threshold_sweep",
-    "files_zone_map_prune_stats",
-    "txn_optimize_compact",
-    "events_linear_interp_resample",
-    "orders_holt_recursive_forecast",
-    "minhash_band_planner",
-    "part_theilsen_trend",
-    "emb_top_pc_power_iteration",
-    "multimodal_image_patch_stats",
-    "part_fisher_price_index",
-    "docs_winnowing_fingerprints",
-    "graph_link_prediction_jaccard",
-    "docs_dup_substring_spans",
-    "docs_langid_confusion",
-    "events_ab_srm_check",
-    "events_conversion_path_topk",
-    "graph_modularity_communities",
-    "events_dau_mau_stickiness",
-    "events_slo_burn_alerts",
-    "events_fano_burstiness",
-    "docs_zipf_rank_freq",
-    "nation_trade_balance",
-    "events_interpurchase_profile",
-    "emb_norm_profile",
-    "docs_heaps_hapax_curve",
-    "events_markov_stationary_power",
-]
-
-# Round-8 repins (VERDICT r7 item 1): CORRECTNESS_r07 landed 50/50
-# green, so nothing fails forward — but the real-PDF golden pipeline
-# needs its FIRST driver row, and the three queries whose semantics
-# changed with the A9 classifier-fidelity fix (commit 6d16a90) rest on
-# pre-fix r3 rows and need FRESH ones. They lead the r8 rotation at
-# positions 1-4; _WINDOW_R8 follows (its displaced 4-query tail leads
-# the r9 round by the standard overflow rule).
-_REPIN_R8: list[str] = [
-    "pdf_real_lattice_goldens",
-    "classify_titles",
-    "etl_pipeline_end_to_end",
-    "continuation_propagate_titles",
-]
-
-# Round-10 re-pin: CORRECTNESS_r09's single hash-fail. The Spark result
-# was value-identical to the oracle; the miss was DuckDB HUGEINT
-# materializing as float64 against Spark's int64 (VERDICT r9 item 1).
-# The oracle now casts both SUM columns to BIGINT; per the standing
-# error-re-check rule the query leads the r10 rotation at position 1.
-_REPIN_R10: list[str] = [
-    "q12_latency_priority",
-]
-
-# Round-8 window seed: _WINDOW_R7 is full (exactly 50), so queries
-# registered after it queue here — they trail the r7 rotation and lead
-# r8's. CORRECTNESS_r07 failures get prepended when the file lands.
-_WINDOW_R8: list[str] = [
-    "pyds_stream_events_replay",
-    "events_autocorrelation",
-    "emb_semantic_dedup",
-    "customer_kanon_generalize",
-    "docs_domain_cap_sample",
-    "lineitem_jackknife_ratio",
-    "emb_hard_negative_mining",
-    "events_mad_outlier_bounds",
-    "orders_psi_drift",
-    "orders_bootstrap_ci_poisson",
-    "docs_char_entropy",
-    "emb_jl_projection_distortion",
-    "lineitem_seasonal_decompose",
-    "orders_lift_gain_curve",
-    "customer_feature_matrix",
-    "lineitem_discount_qty_ols",
-    "gdpr_subject_access_extract",
-    "orders_xmr_control_chart",
-    "docs_normalization_collapse",
-    "orders_lineitem_reconciliation",
-    "orders_column_profile",
-    "nation_budget_largest_remainder",
-    "docs_kwic_concordance",
-    "events_ab_sequential_monitor",
-    "emb_farthest_first_centers",
-    "docs_source_keyness_g2",
-    "events_power_analysis_grid",
-    "emb_bucket_label_ari",
-    "orders_duplicate_payment_audit",
-    "events_gap_outage_report",
-    "events_salted_twophase_agg",
-    "part_substitute_candidates",
-    "supplier_otif_scorecard",
-    "docs_pmi_collocations",
-    "emb_dimension_isotropy_audit",
-    "part_type_eoq_plan",
-    "orders_yoy_growth",
-    "region_supply_locality",
-    "events_growth_accounting",
-    "emb_fisher_discriminant_ratio",
-    "events_user_behavior_entropy",
-    "orders_runs_test",
-    "docs_stopword_induction",
-    "part_single_source_risk",
-    "events_hourly_peaks",
-    "part_xyz_variability_classes",
-    "orders_partition_layout_advisor",
-    "customer_acquisition_pace",
-    "part_chained_price_index",
-    "orders_fd_discovery",
-]
-
-# Round-9 window seed: _WINDOW_R8 is full (exactly 50), so queries
-# registered after it queue here — behind the r8 rotation, leading r9's.
-# FULL at exactly 50 as of round 7 (3 r6l ops + the 47 round-7a..7h
-# registrations); new round-7+ registrations queue in _WINDOW_R10.
-_WINDOW_R9: list[str] = [
-    "docs_js_divergence_sources",
-    "emb_pairwise_distance_histogram",
-    "orders_seasonal_strength_anova",
-    # round-7a TPC-H completion over the derived partsupp dimension
-    # (registry/round7_ops.py)
-    "q2_min_cost_supplier",
-    "q9_product_type_profit",
-    "q11_important_stock",
-    "q12_latency_priority",
-    "q16_supplier_part_count",
-    "q20_surplus_stock_suppliers",
-    # round-7b rank-statistics / inequality / HITS ops
-    # (registry/round7b_ops.py)
-    "lineitem_spearman_rho",
-    "events_kruskal_wallis",
-    "events_welch_ttest",
-    "customer_lorenz_deciles",
-    "customer_theil_index",
-    "graph_hits_bipartite",
-    # round-7c quality-model / trend / cluster-eval / elasticity / PPR ops
-    # (registry/round7c_ops.py)
-    "docs_quality_linear_classifier",
-    "orders_cochran_armitage_trend",
-    "emb_silhouette_buckets",
-    "lineitem_cohens_d_matrix",
-    "part_price_elasticity_loglog",
-    "graph_ppr_seed_part",
-    # round-7d textrank / MLM-plan / hashing / pipe-SQL / aging / OOD ops
-    # (registry/round7d_ops.py)
-    "docs_textrank_keywords",
-    "docs_mlm_span_corruption_plan",
-    "events_feature_hashing_matrix",
-    "sql_pipe_syntax_revenue",
-    "orders_open_order_aging_snapshot",
-    "emb_mahalanobis_ood_diag",
-    # round-7e index/EVT/assortativity/Croston/audit/fit ops
-    # (registry/round7e_ops.py)
-    "part_tornqvist_price_index",
-    "events_peak_over_threshold_tail",
-    "graph_degree_assortativity",
-    "part_croston_intermittent_demand",
-    "lineitem_price_band_outliers",
-    "orders_totalprice_lognormal_fit",
-    # round-7f txn-concurrency / bandit / drift / backtest / ANOVA /
-    # newsvendor ops (registry/round7f_ops.py)
-    "txn_concurrent_conflict_retry",
-    "events_ucb_arm_allocation",
-    "orders_wasserstein_year_drift",
-    "orders_forecast_scoreboard_mape",
-    "customer_segment_value_anova",
-    "part_newsvendor_stock_quantile",
-    # round-7g shrinkage / sensitivity / RDD / retrieval / planner /
-    # experiment ops (registry/round7g_ops.py)
-    "lineitem_return_rate_bayes_shrinkage",
-    "customer_churn_cutoff_sensitivity",
-    "lineitem_qty24_rdd_discount",
-    "docs_query_likelihood_retrieval",
-    "emb_ivf_sharding_plan",
-    "customer_ab_stratified_assignment",
-    # round-7h video / burst-fold / index-merge / TOPSIS / ensemble ops
-    # (registry/round7h_ops.py) — window now FULL at exactly 50
-    "multimodal_video_scene_cuts",
-    "orders_kleinberg_burst_fold",
-    "docs_postings_segment_merge",
-    "supplier_topsis_scorecard",
-    "orders_anomaly_ensemble_votes",
-]
-
-# Round-10 window seed: _WINDOW_R9 filled to exactly 50 during round 7,
-# so round-7i+ registrations queue here — behind the r9 rotation.
-_WINDOW_R10: list[str] = [
-    # round-7i synthetic-control / risk / DP / smoothing / elasticity /
-    # retrieval-eval ops (registry/round7i_ops.py)
-    "part_promo_synthetic_control",
-    "orders_revenue_cvar_shortfall",
-    "docs_dp_count_release",
-    "orders_holtwinters_additive_fold",
-    "part_cross_price_elasticity",
-    "docs_retrieval_ndcg_eval",
-    # round-7j IV/2SLS / paired-test / rank-corr / sketch / profiling /
-    # calibration ops (registry/round7j_ops.py)
-    "lineitem_iv_2sls_demand",
-    "customer_mcnemar_urgency_shift",
-    "lineitem_kendall_tau_b",
-    "events_ams_f2_sketch",
-    "dq_inclusion_dependency_profile",
-    "orders_brier_calibration",
-    # round-7k NB-langid / kappa / symspell / BFS / Little's law /
-    # l-diversity ops (registry/round7k_ops.py)
-    "docs_nb_langid_eval",
-    "docs_kappa_langid_agreement",
-    "docs_symspell_suggest",
-    "graph_bfs_landmark_distances",
-    "orders_littles_law_audit",
-    "customer_l_diversity_audit",
-    # round-7l Markov attribution / heteroskedasticity / inventory-policy /
-    # pinball-loss / Leontief / GROUP-BY-ALL ops (registry/round7l_ops.py)
-    "events_markov_removal_attribution",
-    "lineitem_breusch_pagan_test",
-    "part_ss_inventory_policy_sim",
-    "orders_pinball_loss_eval",
-    "nation_leontief_requirements",
-    "sql_group_by_all_revenue",
-    # round-7m isotonic / drift / MI / causal / association / packing
-    # ops (registry/round7m_ops.py)
-    "lineitem_isotonic_return_calibration",
-    "events_page_hinkley_drift",
-    "lineitem_discount_tax_mutual_info",
-    "customer_ipw_segment_effect",
-    "categorical_cramers_v_matrix",
-    "part_nfd_binpack_plan",
-    # round-7n Viterbi / knapsack / HBOS / Granger / Borda /
-    # reconciliation ops (registry/round7n_ops.py)
-    "events_viterbi_hmm_decode",
-    "part_knapsack_dp_plan",
-    "docs_hbos_outlier_topk",
-    "orders_granger_lag_causality",
-    "nation_borda_priority_consensus",
-    "orders_hierarchical_forecast_reconcile",
-    # round-7o link-prediction / game-theory / HAC / anomaly / panel /
-    # decomposition ops (registry/round7o_ops.py)
-    "graph_adamic_adar_suppliers",
-    "region_shapley_cost_allocation",
-    "orders_trend_newey_west_se",
-    "events_user_sequence_surprisal",
-    "lineitem_twfe_discount_effect",
-    "lineitem_oaxaca_blinder_gap",
-    # round-7p recsys / state-space / LM-smoothing / long-memory /
-    # corpus-comparison / DTW ops (registry/round7p_ops.py)
-    "part_item_item_cf_topk",
-    "orders_kalman_level_filter",
-    "docs_good_turing_smoothing",
-    "events_hurst_rescaled_range",
-    "docs_log_odds_fighting_words",
-    "events_dtw_hourly_profiles",
-    # round-7q conformal / max-coverage / Levene / Chow / richness /
-    # LATERAL ops (registry/round7q_ops.py)
-    "lineitem_conformal_interval_coverage",
-    "customer_coverage_greedy_brands",
-]
-
-# Round-11 window seed: _WINDOW_R10 filled to exactly 50 during round 7's
-# continuation sessions, so later round-7 registrations queue here —
-# behind the r10 rotation (same overflow rule as every prior window).
-_WINDOW_R11: list[str] = [
-    "lineitem_levene_variance_test",
-    "orders_chow_break_test",
-    "docs_yule_k_richness",
-    "sql_lateral_topn_per_nation",
-    # round-7r burstiness / gravity / triplet / BPE / hazard /
-    # variance-bridge ops (registry/round7r_ops.py)
-    "events_gap_burstiness_memory",
-    "nation_gravity_trade_fit",
-    "emb_triplet_margin_audit",
-    "docs_bpe_multi_merge",
-    "events_purchase_conversion_hazard",
-    "orders_price_volume_mix_bridge",
-    # round-7s PII / stemming / lang-similarity / feedback /
-    # stylometry / proximity ops (registry/round7s_ops.py)
-    "docs_pii_detect_redact",
-    "docs_light_stemmer_collapse",
-    "docs_lang_trigram_similarity",
-    "docs_rocchio_query_expansion",
-    "docs_burrows_delta_stylometry",
-    "docs_proximity_phrase_rank",
-    # round-7t forensics / dq-drift / GESD / fiscal-calendar /
-    # subgroup-mining / Greenwood ops (registry/round7t_ops.py)
-    "orders_benford_second_digit",
-    "dq_profile_drift_halves",
-    "orders_gesd_outlier_rounds",
-    "orders_fiscal_445_calendar",
-    "lineitem_subgroup_discovery_beam",
-    "customer_survival_greenwood_ci",
-    # round-7u chain-ladder / fairness / trade / screening /
-    # heavy-tail ops (registry/round7u_ops.py)
-    "orders_chain_ladder_projection",
-    "customer_disparate_impact_audit",
-    "customer_equalized_odds_audit",
-    "nation_rca_specialization",
-    "docs_lexicon_filter_rates",
-    "events_powerlaw_alpha_mle",
-    # round-7v sketch-sweep / entropy-screen / price-forensics /
-    # switching / WINDOW-clause / dedup-sweep ops
-    # (registry/round7v_ops.py)
-    "events_cms_width_sweep",
-    "multimodal_payload_entropy_screen",
-    "part_price_endings_analysis",
-    "customer_brand_switching_matrix",
-    "sql_named_window_surface",
-    "docs_dedup_threshold_sweep",
-    # round-7w assignment / two-sample / residuals / learning-curve /
-    # changepoint / absorption ops (registry/round7w_ops.py)
-    "supplier_nation_greedy_assignment",
-    "emb_energy_distance_sample",
-    "orders_chi2_cell_residuals",
-    "part_experience_curve_slopes",
-    "orders_binary_segmentation_breaks",
-    "events_absorbing_expected_steps",
-    # round-7x scan-statistic / ahash-dedup / calendar / multiple-
-    # testing / reciprocity / index-compression ops
-    # (registry/round7x_ops.py)
-    "events_poisson_scan_statistic",
-    "multimodal_payload_ahash_dedup",
-    "orders_trading_day_adjustment",
-    "customer_segment_holm_ztests",
-    "nation_trade_reciprocity",
-    "docs_postings_varbyte_estimate",
-    # round-7y classifier-eval / gravity-residual / ABC-migration /
-    # queue-sim ops (registry/round7y_ops.py)
-    "emb_nearest_centroid_confusion",
-    "nation_gravity_residual_pairs",
-    "part_abc_class_migration",
-    "orders_priority_preemption_sim",
-]
-
-# Round-12 window seed: _WINDOW_R11 closed full at exactly 50 with the
-# round-7y ops, so the final round-7 registrations queue here.
-_WINDOW_R12: list[str] = [
-    # round-7z reward / sampling-design / backtest / procurement ops
-    # (registry/round7z_ops.py)
-    "events_markov_reward_value",
-    "lineitem_neyman_allocation_plan",
-    "orders_expanding_window_cv",
-    "supplier_kraljic_quadrants",
-    # round-7aa weekday-ANOVA / norm-profile / export-entropy ops
-    # (registry/round7aa_ops.py) — queries 498-500
-    "orders_weekday_anova",
-    "emb_norm_profile_by_label",
-    "nation_export_entropy",
-    # round-7ab overlap / encoding ops (registry/round7ab_ops.py)
-    "part_price_bhattacharyya_overlap",
-    "orders_rle_compression_estimate",
-    # round-7ac inference / scoring / privacy / planner / robust /
-    # graph ops (registry/round7ac_ops.py)
-    "events_ratio_metric_delta_method",
-    "orders_crps_ensemble_eval",
-    "customer_t_closeness_audit",
-    "orders_bloom_fpp_planner",
-    "lineitem_huber_m_estimator",
-    "graph_neighborhood_function_exact",
-    # round-7ad GLM / graph-topology / layout-advisor / uplift /
-    # demand-class / tokenizer-audit ops (registry/round7ad_ops.py)
-    "lineitem_logistic_newton_step",
-    "graph_rich_club_coefficient",
-    "orders_sort_key_pruning_advisor",
-    "events_uplift_qini_by_segment",
-    "part_demand_adi_cv2_classes",
-    "docs_tokenizer_fertility_by_lang",
-    # round-7ae index/CE/histogram/pagination/watermark/readability
-    # ops (registry/round7ae_ops.py)
-    "lineitem_bitmap_index_plan",
-    "join_cardinality_estimate_audit",
-    "events_histogram_selectivity_audit",
-    "sql_pagination_offset_fetch",
-    "events_watermark_delay_planner",
-    "docs_readability_grade",
-    # round-7af centrality/queueing/linkage/intervals/signature/
-    # retention ops (registry/round7af_ops.py)
-    "nation_eigenvector_centrality_trade",
-    "orders_kingman_queue_estimate",
-    "customer_linkage_u_probabilities",
-    "orders_interval_coalesce_islands",
-    "docs_simhash_bit_balance_audit",
-    "events_retention_powerlaw_fit",
-    # round-7ag dedup-budget/session-planner/dq/data-vault/deflation
-    # ops (registry/round7ag_ops.py)
-    "docs_dedup_token_savings",
-    "events_session_timeout_sensitivity",
-    "dq_referential_orphan_audit",
-    "orders_data_vault_hash_keys",
-    "emb_second_pc_deflation",
-    # round-7ah quantile-grid/mixture/business-day/replication/
-    # distinct-window/freshness ops (registry/round7ah_ops.py)
-    "lineitem_quantile_regression_grid",
-    "docs_mixture_temperature_plan",
-    "orders_business_day_sla",
-    "orders_snapshot_vs_cdc_cost",
-    "orders_cumulative_distinct_customers",
-    "dq_freshness_staleness_audit",
-    # round-7ai knn-eval/luhn/circular/keys/cooks/autocomplete ops
-    # (registry/round7ai_ops.py) — closes _WINDOW_R12 at exactly 50
-    "emb_knn_loo_accuracy",
-    "orders_luhn_check_digit_audit",
-    "events_circular_hour_concentration",
-    "dq_candidate_key_uniqueness",
-    "lineitem_cooks_group_influence",
-    "part_edge_ngram_autocomplete_plan",
-]
-
-# Round-13 window seed: _WINDOW_R12 closed full at exactly 50 with the
-# round-7ai ops; registrations after that queue here.
-_WINDOW_R13: list[str] = [
-    # round-7aj multivariate-control/WLS/WoE/HRU/chao1/ITS ops
-    # (registry/round7aj_ops.py)
-    "part_hotelling_t2_brands",
-    "lineitem_wls_discount_slope",
-    "orders_woe_iv_price_bins",
-    "orders_cube_view_selection_greedy",
-    "events_chao1_unseen_users",
-    "events_interrupted_time_series",
-    # round-7ak lead-coverage/netting/ladder/shard/FDR/condorcet ops
-    # (registry/round7ak_ops.py)
-    "docs_lead_k_coverage_curve",
-    "nation_settlement_netting_efficiency",
-    "part_price_ladder_gaps",
-    "docs_hash_shard_balance",
-    "customer_segment_bh_fdr",
-    "orders_condorcet_priority_winner",
-    # round-7al selinger/markov-eval/rounding/percolation/volume ops
-    # (registry/round7al_ops.py)
-    "join_order_cost_enumeration",
-    "events_markov_next_event_accuracy",
-    "lineitem_rounding_reconciliation",
-    "graph_weight_percolation_reach",
-    "dq_volume_dod_anomaly",
-    # round-7am pq-balance/shock/template/unit-price/novelty ops
-    # (registry/round7am_ops.py)
-    "emb_pq_code_balance",
-    "customer_supply_shock_exposure",
-    "docs_template_prefix_census",
-    "lineitem_unit_price_consistency_audit",
-    "events_ab_novelty_decay",
-    # round-7an signature-width/dup-structure ops
-    # (registry/round7an_ops.py)
-    "docs_simhash_width_collisions",
-    "docs_dup_cluster_size_powerlaw",
-    # round-7ao count-model/acquisition-signal ops
-    # (registry/round7ao_ops.py)
-    "customer_order_count_nbd_fit",
-    "customer_first_order_ltv_corr",
-    # round-7ap: the REAL PDF lattice pipeline vs pinned goldens
-    # (registry/round7ap_ops.py)
-    "pdf_real_lattice_goldens",
-]
-
-# Round-13 refresh slots: the leading never-checked backlog
-# (_WINDOW_R12[45:] + _WINDOW_R13) fills 32 of the driver's 50
-# correctness slots; these 18 queries — the ones whose latest driver
-# check is OLDEST (all last checked in round 1, 12 rounds ago; computed
-# from every CORRECTNESS_r*.json) — take the remaining slots so the
-# round re-confirms the stalest greens instead of the freshest.
-_REFRESH_R13: list[str] = [
-    "math_functions",
-    "conditional_functions",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_revenue_by_nation",
-    "agg_count_distinct",
-    "agg_rollup_region_nation",
-    "agg_cube_flag_status",
-    "agg_grouping_sets",
-    "window_running_total",
-    "window_topk_per_customer",
-    "window_lag_order_gap",
-    "top1_customer_per_nation",
-    "semi_join_urgent_customers",
-    "anti_join_unordered_parts",
-    "dedup_exact_projection",
-    "union_dedup_slices",
-    "set_intersect_customers",
-]
-
-# Fallback ordering for everything already driver-green (r1+r2 families).
-_FAMILY_ORDER = [
-    "llm_ops",
-    "events_ops",
-    "pipeline_ops",
-    "etl_ops",
-    "sampling_profile",
-    "scalar_functions",
-    "core_relational",
-    "tpch_deep",
-]
-
-
 def all_queries() -> dict[str, QueryDef]:
-    # Import registers everything on first use (order here is irrelevant —
-    # see _WINDOW_R3/_WINDOW_R4/_FAMILY_ORDER).
+    """Every registered query, as a fresh dict in registration order."""
+    # Importing a module registers its queries; a module missing here
+    # silently drops them (tests/test_registry_contract.py catches that).
     from . import core_relational  # noqa: F401
     from . import tpch_deep  # noqa: F401
     from . import scalar_functions  # noqa: F401
@@ -831,47 +115,4 @@ def all_queries() -> dict[str, QueryDef]:
     from . import round7ao_ops  # noqa: F401
     from . import round7ap_ops  # noqa: F401
 
-    # Round-13 rotation (VERDICT r12 item 6 — drain the backlog):
-    # CORRECTNESS_r12.json landed fully green (50/50 rows+schema+hash on
-    # _WINDOW_R11[45:] + _WINDOW_R12[:45]), so the window flips to the
-    # ONLY queries a driver round has never checked: the displaced
-    # _WINDOW_R12 tail (5) plus _WINDOW_R13 (27, of which 26 are
-    # never-checked; pdf_real_lattice_goldens re-confirms its r08 row).
-    # That fills 32 of the 50 slots; _REFRESH_R13 (the 18 stalest greens,
-    # all last checked in round 1) fills the rest, so a green
-    # CORRECTNESS_r13 makes the cumulative driver coverage 570/570.
-    # Already-green windows trail for the overflow rule as before.
-    seen: set[str] = set()
-    window_order = [
-        n
-        for n in _WINDOW_R12[45:]
-        + _WINDOW_R13
-        + _REFRESH_R13
-        + _WINDOW_R12
-        + _WINDOW_R11
-        + _WINDOW_R10
-        + _WINDOW_R9
-        + _WINDOW_R8
-        + _WINDOW_R7
-        + _WINDOW_R6
-        + _WINDOW_R5
-        + _WINDOW_R3
-        + _WINDOW_R4
-        if not (n in seen or seen.add(n))
-    ]
-    pinned = {n: i for i, n in enumerate(window_order)}
-    missing = [n for n in pinned if n not in _REGISTRY]
-    if missing:  # a rename/removal must fail loudly, not silently shrink
-        raise RuntimeError(f"window names not in registry: {missing}")
-    fam_rank = {m: i for i, m in enumerate(_FAMILY_ORDER)}
-    module_of = {
-        name: qd.fn.__module__.rsplit(".", 1)[-1] for name, qd in _REGISTRY.items()
-    }
-    ordered = sorted(
-        _REGISTRY.items(),
-        key=lambda kv: (
-            pinned.get(kv[0], len(pinned)),
-            fam_rank.get(module_of[kv[0]], len(_FAMILY_ORDER)),
-        ),
-    )
-    return dict(ordered)
+    return dict(_REGISTRY)

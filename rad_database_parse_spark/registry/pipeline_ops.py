@@ -605,9 +605,10 @@ def part_name_neardup(spark: SparkSession, sf_dir: str):
     standard many-key shuffle AQE can split further.
 
     Hot-block remedy, pre-positioned r13 (VERDICT r12 item 5, SCALE.md):
-    ``spark.graft.neardup.salt = S`` (via SPARK_GRAFT_CONF or a runtime
-    conf set; default 0 = off) additionally salts BOTH sides of the join
-    with a deterministic ``pmod(xxhash64(partkey), S)`` — side A carries
+    ``spark.graft.neardup.salt = S`` (set through ``get_session``'s
+    ``extra_conf`` or ``spark.conf.set``; default 0 = off) additionally
+    salts BOTH sides of the join with a deterministic
+    ``pmod(xxhash64(partkey), S)`` — side A carries
     its own salt and explodes the partner salt 0..S-1, side B the
     mirror — so a qualifying pair matches at exactly one (sa, sb) of the
     S² sub-keys and the output is IDENTICAL by construction while the

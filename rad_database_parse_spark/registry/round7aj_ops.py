@@ -470,8 +470,8 @@ def orders_cube_view_selection_greedy(spark: SparkSession, sf_dir: str):
     constructing this op's DataFrame runs the fact-scale CUBE job at
     build time (the collect feeds the driver-side greedy), so plan-only
     sweeps (e.g. an explain-only audit) pay the full pass per build.
-    bench.py times the builder inside the query window, so the bench
-    timing is honest."""
+    A timer must include the builder call to count that pass, as
+    perfbench's registry ops do."""
     o = t(spark, sf_dir, "orders")
     dims = o.select(
         "o_orderpriority",

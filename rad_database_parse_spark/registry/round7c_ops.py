@@ -612,7 +612,11 @@ def graph_ppr_seed_part(spark: SparkSession, sf_dir: str):
     # all 3 iterations) reads ed — so the edge cache must not outlive
     # setup for library callers that have no harness cache sweep. _r2's
     # persist mark never materialized in this query (no consumer), so
-    # unpersisting it only drops the CacheManager entry.
+    # unpersisting it only drops the CacheManager entry. The CacheManager
+    # keys entries by plan, so this release is session-wide: a later
+    # graph_label_propagation or modularity op in the same session
+    # re-pays the lineitem self-join the shared edge cache saved.
+    # Results are unaffected.
     _edges.unpersist()
     _r2.unpersist()
     nodes = ed.select(F.col("u").alias("node")).distinct()

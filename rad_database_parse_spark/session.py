@@ -23,48 +23,16 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 _JVM_OPTS_KEY = "spark.driver.extraJavaOptions"
 _GC_FLAG = "-XX:+UseParallelGC"
-# A/B hook (round 12 optimization): semicolon-separated `key=value` pairs
-# applied LAST, so an interleaved bench arm can flip any SQL/core conf
-# through the environment without a code change, e.g.
-#   SPARK_GRAFT_CONF="spark.sql.join.preferSortMergeJoin=false"
-# Caller `extra_conf` still wins over the env (applied after it).
-# LIFECYCLE (ADVICE r12): the hook is read only when a session is BUILT —
-# get_session returns an already-active session untouched, so an
-# in-process arm flip is a silent no-op. A/B tools must run each arm in
-# a fresh subprocess.
-_CONF_ENV = "SPARK_GRAFT_CONF"
-
-
-def _env_conf() -> dict[str, str]:
-    raw = os.environ.get(_CONF_ENV, "")
-    out: dict[str, str] = {}
-    for item in raw.split(";"):
-        item = item.strip()
-        if not item:
-            continue
-        if "=" not in item:
-            raise ValueError(f"{_CONF_ENV} entry without '=': {item!r}")
-        k, v = item.split("=", 1)
-        k = k.strip()
-        if k == _JVM_OPTS_KEY:
-            # Silently dropping JVM flags would make an A/B arm measure
-            # stock with no signal (ADVICE r12); JVM options have their
-            # own merge path via SPARK_DRIVER_EXTRA_JAVA_OPTIONS.
-            raise ValueError(
-                f"{_CONF_ENV} cannot set {_JVM_OPTS_KEY}; use the"
-                " SPARK_DRIVER_EXTRA_JAVA_OPTIONS env var instead"
-            )
-        out[k] = v.strip()
-    return out
 
 
 def _merge_gc_flag(opts: str) -> str:
     """Append the throughput-collector flag unless the caller already
-    names a collector or SPARK_GRAFT_STOCK_GC=1 asks for JVM defaults.
+    names a collector.
 
-    Shipped round 12 from the four-arm interleaved full-battery GC A/B
-    (per-arm results BENCH_AB_r12_*.json are in git history up to commit
-    27a9fa0; decision rule pre-registered before the runs): vs stock
+    Shipped round 12 from a four-arm interleaved GC A/B over the legacy
+    full query battery (the battery is in git history up to commit
+    6582a12, the per-arm results BENCH_AB_r12_*.json up to 27a9fa0;
+    decision rule pre-registered before the runs): vs stock
     G1, ParallelGC cut
     battery-concurrent ("organic") GC 21.5→5.3s (-75-80%, consistent in
     all four parallel-arm runs) and won battery min-of-2 342.0s vs
@@ -79,10 +47,8 @@ def _merge_gc_flag(opts: str) -> str:
     remembered-set upkeep tax Tungsten's allocation-heavy operators).
     This is the classic throughput-collector recommendation for batch
     Spark; on a real cluster apply the same flag to
-    spark.executor.extraJavaOptions. SPARK_GRAFT_STOCK_GC=1 restores
-    stock for future A/Bs."""
-    if os.environ.get("SPARK_GRAFT_STOCK_GC") == "1":
-        return opts
+    spark.executor.extraJavaOptions. To measure stock G1, name it in the
+    options (``-XX:+UseG1GC``)."""
     if re.search(r"-XX:[+-]Use\w*GC", opts):
         return opts  # never clobber an explicit collector choice
     return f"{opts} {_GC_FLAG}".strip()
@@ -96,8 +62,8 @@ def get_session(
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
-    An existing active session is reused — the driver harness owns session
-    lifecycle in verification runs.
+    An existing active session is reused untouched, so ``extra_conf`` (the
+    one way to set confs here) applies only when a session is built.
     """
     active = SparkSession.getActiveSession()
     if active is not None:
@@ -134,8 +100,6 @@ def get_session(
     caller_opts = _merge_gc_flag(caller_opts)
     if caller_opts:
         builder = builder.config(_JVM_OPTS_KEY, caller_opts)
-    for k, v in _env_conf().items():  # _env_conf rejects _JVM_OPTS_KEY
-        builder = builder.config(k, v)
     for k, v in merged.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -146,7 +110,7 @@ def get_session(
 def clear_caches(spark: SparkSession) -> None:
     """HARNESS-ONLY cache sweep: drop ALL cached state between queries.
 
-    For bench.py / the correctness gate / tests, which own the whole
+    For ``tools/check_correctness.py`` and tests, which own the whole
     session. It is deliberately indiscriminate — it unpersists EVERY
     RDD in the context's persistent-RDD map, including caches owned by
     unrelated caller code on a shared ``getOrCreate`` session — so do
@@ -164,6 +128,6 @@ def clear_caches(spark: SparkSession) -> None:
     spark.catalog.clearCache()
     # JavaSparkContext.getPersistentRDDs(): Map<Integer, JavaRDD<?>>.
     # unpersist(True) = blocking, so block release can't bleed into the
-    # next timed bench window (ADVICE r11).
+    # next query's run (ADVICE r11).
     for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
         jrdd.unpersist(True)

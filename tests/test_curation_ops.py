@@ -146,13 +146,10 @@ def test_cms_overestimates_and_ranks_deterministically(spark, sf_dir):
         assert r.true_n == truth[r.user_id]
 
 
-def test_curation_ops_kept_their_driver_window_pin(spark):
+def test_curation_ops_registered_under_their_names():
     # These ten got their first driver CORRECTNESS rows in round 5 (all
-    # green). They must stay pinned in _WINDOW_R5 — the rotation's record
-    # of which round covered them — and registered under the same names.
-    from rad_database_parse_spark.registry import _WINDOW_R5
-
-    names = list(all_queries())
+    # green); a rename would orphan that record, so the names must stay.
+    names = all_queries()
     for q in (
         "docs_cross_source_overlap",
         "docs_bigram_lm_score",
@@ -165,7 +162,7 @@ def test_curation_ops_kept_their_driver_window_pin(spark):
         "events_ewma_smoothing",
         "nation_supplier_hhi",
     ):
-        assert q in _WINDOW_R5 and q in names
+        assert q in names
 
 
 def test_ewma_equals_recursive_definition(spark, sf_dir):

@@ -5,10 +5,10 @@
    reads only its documented env vars; ``extra_conf`` overrides any conf.
 2. ``clear_caches``: catalog ``clearCache()`` does not release
    RDD-level persists (``localCheckpoint`` blocks live outside the
-   CacheManager); the gate/bench hygiene sweep must release both.
-3. ``_merge_gc_flag``: the r12 ParallelGC default must never clobber
-   an explicit collector choice and must honor the
-   SPARK_GRAFT_STOCK_GC=1 revert knob.
+   CacheManager); the correctness-check sweep must release both.
+3. ``_merge_gc_flag``: the r12 ParallelGC default is appended to the
+   driver JVM options and never clobbers an explicit collector choice;
+   naming a collector is the only way to opt out.
 """
 
 from __future__ import annotations
@@ -23,7 +23,6 @@ import pytest
 import rad_database_parse_spark.session as session_mod
 from rad_database_parse_spark.session import (
     _GC_FLAG,
-    _env_conf,
     _merge_gc_flag,
     clear_caches,
     get_session,
@@ -33,55 +32,17 @@ CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
 JVM_OPTS = "spark.driver.extraJavaOptions"
 
 
-def test_env_conf_parses_pairs(monkeypatch):
-    monkeypatch.setenv(
-        "SPARK_GRAFT_CONF",
-        "spark.sql.join.preferSortMergeJoin=false; spark.io.compression.codec=zstd ;",
-    )
-    assert _env_conf() == {
-        "spark.sql.join.preferSortMergeJoin": "false",
-        "spark.io.compression.codec": "zstd",
-    }
-
-
-def test_env_conf_empty_and_malformed(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_CONF", raising=False)
-    assert _env_conf() == {}
-    monkeypatch.setenv("SPARK_GRAFT_CONF", "no-equals-sign")
-    with pytest.raises(ValueError):
-        _env_conf()
-
-
-def test_env_conf_rejects_jvm_options(monkeypatch):
-    # silently dropping a JVM-flag arm would make an A/B measure stock
-    # with no signal (ADVICE r12) — it must fail loudly, pointing at
-    # SPARK_DRIVER_EXTRA_JAVA_OPTIONS
-    monkeypatch.setenv(
-        "SPARK_GRAFT_CONF", "spark.driver.extraJavaOptions=-XX:+UseZGC"
-    )
-    with pytest.raises(ValueError, match="SPARK_DRIVER_EXTRA_JAVA_OPTIONS"):
-        _env_conf()
-
-
-def test_gc_flag_appended_by_default(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_STOCK_GC", raising=False)
+def test_gc_flag_appended_by_default():
     assert _merge_gc_flag("") == _GC_FLAG
     assert _merge_gc_flag("-Xss4m") == f"-Xss4m {_GC_FLAG}"
 
 
-def test_gc_flag_never_clobbers_explicit_collector(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_STOCK_GC", raising=False)
+def test_gc_flag_never_clobbers_explicit_collector():
     # + and - forms, any collector name
     assert _merge_gc_flag("-XX:+UseZGC") == "-XX:+UseZGC"
     assert _merge_gc_flag("-XX:+UseG1GC -Xss4m") == "-XX:+UseG1GC -Xss4m"
     assert _merge_gc_flag("-XX:-UseG1GC") == "-XX:-UseG1GC"
     assert _merge_gc_flag(_GC_FLAG) == _GC_FLAG
-
-
-def test_gc_flag_stock_knob_reverts(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_STOCK_GC", "1")
-    assert _merge_gc_flag("") == ""
-    assert _merge_gc_flag("-Xss4m") == "-Xss4m"
 
 
 def test_clear_caches_releases_localcheckpoint_blocks(spark):
@@ -155,8 +116,6 @@ def test_session_conf_sizes_the_codegen_cache(spark):
 
 
 def test_get_session_reads_only_its_documented_env(fake_build, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_CONF", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_STOCK_GC", raising=False)
     monkeypatch.setenv("SPARK_DRIVER_EXTRA_JAVA_OPTIONS", "-Xss4m")
     conf, read = fake_build()
     assert conf[CODEGEN_CACHE] == "256"
@@ -165,13 +124,10 @@ def test_get_session_reads_only_its_documented_env(fake_build, monkeypatch):
         "SPARK_GRAFT_CPUS",
         "SPARK_GRAFT_DRIVER_MEM",
         "SPARK_DRIVER_EXTRA_JAVA_OPTIONS",
-        "SPARK_GRAFT_STOCK_GC",
-        "SPARK_GRAFT_CONF",
     }
 
 
 def test_extra_conf_overrides_session_defaults(fake_build, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_STOCK_GC", raising=False)
     monkeypatch.setenv("SPARK_DRIVER_EXTRA_JAVA_OPTIONS", "-Xss4m")
     conf, _ = fake_build(extra_conf={CODEGEN_CACHE: "1000", JVM_OPTS: "-Xmx1g"})
     assert conf[CODEGEN_CACHE] == "1000"

@@ -133,10 +133,9 @@ def main() -> int:
         finally:
             # drop persisted intermediates so cached partitions from ops
             # that persist() mid-plan don't accumulate across the
-            # single-session 569-query run (ADVICE r6; bench.py already
-            # does the same between timed runs). clear_caches also sweeps
-            # RDD-level localCheckpoint blocks, which clearCache misses
-            # (ADVICE r10).
+            # single-session 570-query run (ADVICE r6). clear_caches also
+            # sweeps RDD-level localCheckpoint blocks, which clearCache
+            # misses (ADVICE r10).
             clear_caches(spark)
         if qd.oracle is None:
             ok = len(spark_pdf) >= 0
