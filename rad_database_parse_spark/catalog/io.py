@@ -90,9 +90,12 @@ _SCHEMA_CONFS = (
 _SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 
-def _fingerprint(spark: SparkSession, path: str) -> tuple | None:
-    """The file version and inference confs a schema was inferred under;
-    None when the path is not on the local file system."""
+def file_version(path: str) -> tuple | None:
+    """The version of a local file or directory as ``os.stat`` sees it:
+    ``(st_ino, st_size, st_mtime_ns)`` of a file, or the relative name and
+    those of every file under a directory. None when the path is not on
+    the local file system. Pure ``os`` calls, no Spark; the schema memo
+    here and the registry's prepared-plan memo both key on it."""
     try:
         if os.path.isdir(path):
             files = []
@@ -104,11 +107,18 @@ def _fingerprint(spark: SparkSession, path: str) -> tuple | None:
                     files.append(
                         (os.path.relpath(full, path), st.st_ino, st.st_size, st.st_mtime_ns)
                     )
-            stats = tuple(files)
-        else:
-            st = os.stat(path)
-            stats = (st.st_ino, st.st_size, st.st_mtime_ns)
+            return tuple(files)
+        st = os.stat(path)
+        return (st.st_ino, st.st_size, st.st_mtime_ns)
     except OSError:
+        return None
+
+
+def _fingerprint(spark: SparkSession, path: str) -> tuple | None:
+    """The file version and inference confs a schema was inferred under;
+    None when the path is not on the local file system."""
+    stats = file_version(path)
+    if stats is None:
         return None
     return stats, tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
 

@@ -18,23 +18,27 @@ data files, committed with an atomic create-if-absent):
   isolation for free; any historical version stays readable (time
   travel) until explicitly vacuumed. A manifest without a ``"schema"``
   key (written before the log carried one) is read by inference.
-- Writers stage data first, then publish with ``O_CREAT|O_EXCL`` on the
-  next manifest name. Exactly one concurrent writer can win a version;
-  losers see ``CommitConflict`` and retry against the fresh snapshot
-  (optimistic concurrency, the same protocol shape as Delta's
-  ``put-if-absent`` commit). A crashed writer leaves only unreferenced
-  data files — never a torn table.
+- Writers stage data first, then write the manifest in full to a temp
+  name in ``_manifests/``, fsync it, and publish it with ``os.link`` to
+  the next manifest name (an atomic create-if-absent). Exactly one
+  concurrent writer can win a version; losers see ``CommitConflict`` and
+  retry against the fresh snapshot (optimistic concurrency, the same
+  protocol shape as Delta's ``put-if-absent`` commit). A published
+  manifest is always complete, so a reader never sees a partial one, and
+  a crashed writer leaves only unreferenced data files and at most a temp
+  manifest that no reader lists — never a torn table.
 
 At 100 TB the data plane is unchanged parquet (all scans keep pushdown /
 pruning); the control plane is one tiny JSON per commit. On an object
-store, swap the O_EXCL create for the store's conditional-put primitive —
-the protocol is identical.
+store, swap the link for the store's conditional-put primitive — the
+protocol is identical.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import uuid
 
 from pyspark import StorageLevel
@@ -54,17 +58,26 @@ def _manifest_path(root: str, version: int) -> str:
     return os.path.join(_manifest_dir(root), f"v{version:010d}.json")
 
 
-def latest_version(root: str) -> int | None:
-    """Highest committed version, None for an uninitialized table."""
+_MANIFEST_NAME = re.compile(r"v(\d{10})\.json")
+
+
+def list_versions(root: str) -> list[int]:
+    """Every committed version, ascending. Only published manifest names
+    count; a writer's temp manifest is never listed."""
     mdir = _manifest_dir(root)
     if not os.path.isdir(mdir):
-        return None
-    versions = [
-        int(name[1:11])
-        for name in os.listdir(mdir)
-        if name.startswith("v") and name.endswith(".json")
-    ]
-    return max(versions) if versions else None
+        return []
+    return sorted(
+        int(m.group(1))
+        for m in map(_MANIFEST_NAME.fullmatch, os.listdir(mdir))
+        if m
+    )
+
+
+def latest_version(root: str) -> int | None:
+    """Highest committed version, None for an uninitialized table."""
+    versions = list_versions(root)
+    return versions[-1] if versions else None
 
 
 def read_snapshot(
@@ -95,10 +108,10 @@ def commit(
     """Publish `df` as the table's next full snapshot (copy-on-write).
 
     `expected_version` is the version this write was derived from (None
-    for table creation). Data is staged before the manifest exists, so a
-    failure anywhere before the atomic create leaves the table untouched.
-    Raises CommitConflict if any other writer published
-    expected_version+1 first.
+    for table creation). Data and the full manifest are staged before the
+    manifest is published, so a failure anywhere before the atomic link
+    leaves the table untouched. Raises CommitConflict if any other writer
+    published expected_version+1 first.
     """
     new_version = 0 if expected_version is None else expected_version + 1
     data_dir = os.path.join(root, "data", uuid.uuid4().hex)
@@ -111,27 +124,24 @@ def commit(
         "files": [data_dir],
         "schema": df.schema.jsonValue(),
     }
-    path = _manifest_path(root, new_version)
+    tmp = os.path.join(_manifest_dir(root), f".{uuid.uuid4().hex}.json.tmp")
     try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise CommitConflict(
-            f"version {new_version} already committed at {root}"
-        ) from None
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f)
+        with open(tmp, "x") as f:
+            json.dump(manifest, f)
+            f.flush()
+            os.fsync(f.fileno())
+        try:
+            os.link(tmp, _manifest_path(root, new_version))
+        except FileExistsError:
+            raise CommitConflict(
+                f"version {new_version} already committed at {root}"
+            ) from None
+    finally:
+        try:
+            os.unlink(tmp)
+        except FileNotFoundError:
+            pass
     return new_version
-
-
-def list_versions(root: str) -> list[int]:
-    mdir = _manifest_dir(root)
-    if not os.path.isdir(mdir):
-        return []
-    return sorted(
-        int(name[1:11])
-        for name in os.listdir(mdir)
-        if name.startswith("v") and name.endswith(".json")
-    )
 
 
 def committed_ops(root: str) -> set[str]:

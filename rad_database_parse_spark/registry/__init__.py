@@ -13,14 +13,31 @@ Float-parity policy (what makes hash-compare possible across engines):
   operands are deterministic);
 - genuinely-float quantities (cosines) are rounded before ranking and ties
   break on ids.
+
+Prepared plans: ``QueryDef.fn`` memoizes the analyzed logical plan of each
+build in ``_PLANS``, keyed by ``(name, sf_dir)``. A call that finds an entry
+built in the same JVM session, under an equal ``spark.conf.getAll``
+snapshot, over input files whose ``catalog.io.file_version`` is unchanged,
+returns a fresh ``Dataset.ofRows(session, plan)``: it skips the Python
+build and the analysis, and still runs optimization, physical planning,
+AQE and every stage. Only a build that launched no Spark job and whose plan
+is deterministic, calls no Python UDF and reads only local files (or a
+``Range`` / ``OneRowRelation``) is memoized; anything else builds every
+time. So a builder must derive its plan from its inputs, ``sf_dir`` and the
+session conf alone. ``register`` returns the raw builder, so direct imports
+never touch the memo; ``session.clear_caches`` empties it. There is no knob.
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 from collections.abc import Callable
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+
+from ..catalog.io import file_version
 
 
 @dataclass(frozen=True)
@@ -32,14 +49,147 @@ class QueryDef:
 _REGISTRY: dict[str, QueryDef] = {}
 
 
+@dataclass
+class _Prepared:
+    """One memoized build and what it was built under."""
+
+    session: object  # py4j handle of the JVM SparkSession
+    conf: str  # that session's conf when the build started
+    inputs: tuple  # ((local path, file_version(path)), ...)
+    plan: object  # py4j handle of the analyzed LogicalPlan
+    hits: int = 0
+
+
+# (name, sf_dir) -> the last eligible build; at most one entry per key.
+_PLANS: dict[tuple[str, str], _Prepared] = {}
+
+# Every Dataset over a plan adds its id to a set tagged on the plan's root
+# (Spark's ambiguous-self-join check), so an entry is rebuilt after this
+# many hits to keep that set bounded.
+_MAX_HITS = 1024
+
+
+def clear_prepared_plans() -> None:
+    """Forget every memoized plan; the next call of each query builds."""
+    _PLANS.clear()
+
+
+@functools.cache
+def _jvm_refs(jvm) -> tuple:
+    """The JVM handles the memo uses, looked up once per gateway (each
+    dotted name costs a py4j round trip per segment)."""
+    patterns = jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+    return (
+        jvm.org.apache.spark.sql.classic.Dataset,
+        patterns.PYTHON_UDF(),
+        patterns.GENERATE(),
+    )
+
+
+def _conf_snapshot(jsession) -> str:
+    # one string from the JVM, not a py4j call per conf
+    return jsession.conf().getAll().toString()
+
+
+def _calls_python_udtf(plan, generate) -> bool:
+    """Whether a ``Generate`` in `plan` runs a Python UDTF. A UDTF carries
+    no tree pattern of its own, so this walks down only the subtrees that
+    hold a ``Generate``."""
+    if not plan.containsPattern(generate):
+        return False
+    if (
+        plan.nodeName() == "Generate"
+        and plan.generator().getClass().getSimpleName() == "PythonUDTF"
+    ):
+        return True
+    children = plan.children()
+    return any(
+        _calls_python_udtf(children.apply(i), generate)
+        for i in range(children.length())
+    )
+
+
+def _prepare(spark: SparkSession, df: DataFrame, conf: str) -> _Prepared | None:
+    """The memo entry for a fresh build `df`, or None when its plan may not
+    be replayed: it is nondeterministic, calls a Python UDF (scalar,
+    aggregate, map or table function), or has a leaf other than a
+    ``LogicalRelation`` over local paths, a ``Range`` or a
+    ``OneRowRelation`` (subquery plans included)."""
+    _, python_udf, generate = _jvm_refs(spark._jvm)
+    plan = df._jdf.queryExecution().analyzed()
+    subqueries = plan.subqueriesAll()
+    inputs = []
+    for p in [plan] + [subqueries.apply(i) for i in range(subqueries.length())]:
+        if (
+            not p.deterministic()
+            or p.containsPattern(python_udf)
+            or _calls_python_udtf(p, generate)
+        ):
+            return None
+        leaves = p.collectLeaves()
+        for i in range(leaves.length()):
+            leaf = leaves.apply(i)
+            kind = leaf.nodeName()
+            if kind in ("Range", "OneRowRelation"):
+                continue
+            if kind != "LogicalRelation":
+                return None
+            try:  # only a HadoopFsRelation has a file index
+                roots = leaf.relation().location().rootPaths().mkString("\n")
+            except Py4JError:
+                return None
+            for uri in roots.split("\n"):  # qualified: file:/abs/path
+                path = uri[len("file:"):]
+                version = file_version(path) if uri.startswith("file:/") else None
+                if version is None:
+                    return None
+                inputs.append((path, version))
+    return _Prepared(spark._jsparkSession, conf, tuple(inputs), plan)
+
+
+def _memoized(name: str, fn):
+    """`fn` behind the prepared-plan memo (see the module docstring)."""
+
+    @functools.wraps(fn)
+    def build(spark, sf_dir):
+        jsession = spark._jsparkSession
+        key = (name, sf_dir)
+        conf = _conf_snapshot(jsession)
+        hit = _PLANS.get(key)
+        if (
+            hit is not None
+            and hit.session is jsession
+            and hit.conf == conf
+            and hit.hits < _MAX_HITS
+            and all(file_version(p) == v for p, v in hit.inputs)
+        ):
+            hit.hits += 1
+            dataset = _jvm_refs(spark._jvm)[0]
+            return DataFrame(dataset.ofRows(jsession, hit.plan), spark)
+        _PLANS.pop(key, None)
+        dag = spark.sparkContext._jsc.sc().dagScheduler()
+        jobs = dag.numTotalJobs()
+        df = fn(spark, sf_dir)
+        if dag.numTotalJobs() == jobs:
+            entry = _prepare(spark, df, conf)
+            if entry is not None:
+                _PLANS[key] = entry
+        return df
+
+    return build
+
+
 def register(name: str, oracle: str | None):
+    """Register `fn` as query `name`. ``QueryDef.fn`` is `fn` behind the
+    prepared-plan memo; the decorator returns `fn` itself."""
+
     def deco(fn):
         if name in _REGISTRY:  # a silent overwrite once hid a whole op
             raise ValueError(
                 f"duplicate registry name {name!r}: already registered by "
                 f"{_REGISTRY[name].fn.__module__}"
             )
-        _REGISTRY[name] = QueryDef(fn=fn, oracle=oracle)
+        _REGISTRY[name] = QueryDef(fn=_memoized(name, fn), oracle=oracle)
         return fn
 
     return deco

@@ -19,6 +19,8 @@ import re
 
 from pyspark.sql import SparkSession
 
+from .registry import clear_prepared_plans
+
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 _JVM_OPTS_KEY = "spark.driver.extraJavaOptions"
@@ -124,7 +126,12 @@ def clear_caches(spark: SparkSession) -> None:
     only when Python+JVM GC and the ContextCleaner get around to the
     dropped references — nondeterministic over a long many-query
     session. This sweeps both: the catalog cache, then every RDD still
-    registered in the context's persistent-RDD map."""
+    registered in the context's persistent-RDD map.
+
+    It also forgets the registry's prepared plans
+    (``registry.clear_prepared_plans``), so the next call of each
+    registry query is a fresh Python build and analysis."""
+    clear_prepared_plans()
     spark.catalog.clearCache()
     # JavaSparkContext.getPersistentRDDs(): Map<Integer, JavaRDD<?>>.
     # unpersist(True) = blocking, so block release can't bleed into the

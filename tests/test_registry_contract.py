@@ -3,7 +3,8 @@
 The names and ``QueryDef``s are the contract; the order ``all_queries()``
 returns them in is not. A rename, a removal or a module missing from
 ``all_queries()``'s imports must fail here, not silently shrink the
-inventory.
+inventory. ``QueryDef.fn`` is the builder behind the prepared-plan memo;
+``register`` hands the builder itself back to its module.
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ import subprocess
 import sys
 
 import __spark_entry__
+from rad_database_parse_spark import registry
 from rad_database_parse_spark.registry import all_queries
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -23,13 +25,14 @@ def test_registry_holds_all_570_queries():
 
 
 def test_entry_exposes_the_registry():
-    registry = all_queries()
+    queries_by_name = all_queries()
     queries = __spark_entry__.queries()
-    assert queries.keys() == registry.keys()
-    assert all(queries[n] is qd.fn for n, qd in registry.items())
+    assert len(queries) == 570 and all(callable(fn) for fn in queries.values())
+    assert queries.keys() == queries_by_name.keys()
+    assert all(queries[n] is qd.fn for n, qd in queries_by_name.items())
     oracles = __spark_entry__.oracle_sql()
     assert oracles == {
-        n: qd.oracle for n, qd in registry.items() if qd.oracle is not None
+        n: qd.oracle for n, qd in queries_by_name.items() if qd.oracle is not None
     }
     assert len(oracles) == 569
 
@@ -62,3 +65,25 @@ def test_all_queries_returns_a_fresh_copy():
     first["not_a_query"] = None
     assert len(all_queries()) == 570
     assert "not_a_query" not in all_queries()
+
+
+def test_query_fn_wraps_the_decorated_builder():
+    for name, qd in all_queries().items():
+        builder = qd.fn.__wrapped__
+        # the module-level name is the builder itself, not the wrapper
+        assert getattr(sys.modules[builder.__module__], builder.__name__) is builder, name
+        assert qd.fn is not builder
+        assert (qd.fn.__module__, qd.fn.__qualname__, qd.fn.__doc__) == (
+            builder.__module__, builder.__qualname__, builder.__doc__,
+        ), name
+
+
+def test_register_returns_the_raw_builder():
+    def builder(spark, sf_dir):
+        return spark.range(1)
+
+    try:
+        assert registry.register("contract_probe", None)(builder) is builder
+        assert registry._REGISTRY["contract_probe"].fn.__wrapped__ is builder
+    finally:
+        registry._REGISTRY.pop("contract_probe", None)
