@@ -18,8 +18,10 @@ recursive-CTE closure.
 
 Scale notes: per-iteration state is one (node, label) row per node —
 shuffles are keyed on node/label ids, never on document payloads.
-`localCheckpoint` truncates the growing lineage each round (on a real
-cluster, set a checkpoint dir and use `checkpoint` for fault tolerance).
+`localCheckpoint` truncates the lineage at entry (the edge list) and at
+every fixpoint probe (the labels), so no round plans against the caller's
+pair lineage (on a real cluster, set a checkpoint dir and use `checkpoint`
+for fault tolerance).
 The reference has no transitive dedup — its exists-probe dedup
 (grover-dev/rad-database-parse database.py:43-61) is exact-match only;
 this is north-star surface.
@@ -33,39 +35,42 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def connected_components(
-    pairs: DataFrame, src: str, dst: str, max_iter: int = 25,
-    probe_every: int = 2,
-) -> DataFrame:
-    """(node, component) for every node in `pairs`, component = min reachable
-    node id. Exact fixpoint (driver-checked), ≤ max_iter rounds.
+# Pointer jumping converges in O(log n) rounds, so the fixpoint probe
+# (one checkpoint job + one count job) runs every _PROBE_EVERY rounds, not
+# every round; off-probe rounds stay lazy and the next probe's checkpoint
+# materializes the 2-round lineage once.
+_MAX_ROUNDS = 25
+_PROBE_EVERY = 2
 
-    The fixpoint probe (a count job + eager checkpoint) runs every
-    `probe_every` iterations, not every one — pointer jumping converges in
-    O(log n) rounds, so per-round probing spends half the driver
-    round-trips discovering "not done yet" (VERDICT r5 item 5). Off-probe
-    rounds stay fully lazy (persist marks, no jobs); the next probe's
-    checkpoint materializes the 2-round lineage once. Worst case this runs
-    one extra (idempotent) iteration after convergence — assignments are
-    identical either way."""
+
+def connected_components(pairs: DataFrame, src: str, dst: str) -> DataFrame:
+    """(node, component) for every node in `pairs`, component = min reachable
+    node id. Exact fixpoint (driver-checked), ≤ _MAX_ROUNDS rounds.
+
+    The symmetrized edge list is checkpointed once at entry, so no round
+    re-analyzes or re-runs the caller's plan, and the result's lineage
+    holds only checkpoint blocks. Each round carries its input label as
+    `prev`; a probe round checkpoints the labels and counts
+    `label != prev` on the checkpoint. Worst case this runs one extra
+    (idempotent) round after convergence; assignments are identical
+    either way."""
     # the distinct() looks redundant (pairs are already unique and MIN is
     # duplicate-insensitive) but measured FASTER end-to-end: its shuffle
-    # leaves the persisted edge list compactly partitioned for the
-    # per-round joins (24.9s vs 36.0s at sf0.1 without it).
+    # leaves the edge list compactly partitioned for the per-round joins
+    # (24.9s vs 36.0s at sf0.1 without it).
     edges = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
     labels = (
         edges.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    retired: list[DataFrame] = []
-    for i in range(1, max_iter + 1):
+    for i in range(1, _MAX_ROUNDS + 1):
+        labels = labels.select("node", "label")
         # (1) min label among direct neighbors
         nbr = (
             edges.join(labels, edges.v == labels.node)
@@ -77,42 +82,25 @@ def connected_components(
             F.least(
                 F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
             ).alias("label"),
+            F.col("label").alias("prev"),
         )
         # (2) pointer jumping: label(v) = label(label(v))
         parents = stepped.select(
             F.col("node").alias("p_node"), F.col("label").alias("p_label")
         )
-        jumped = stepped.join(
+        labels = stepped.join(
             parents, stepped.label == parents.p_node, "left"
         ).select(
             "node",
             F.least(
                 F.col("label"), F.coalesce(F.col("p_label"), F.col("label"))
             ).alias("label"),
+            "prev",
         )
-        if i % probe_every == 0 or i == max_iter:
-            jumped = jumped.localCheckpoint(eager=True)
-            changed = (
-                jumped.alias("n")
-                .join(labels.alias("o"), "node")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .count()
-            )
-            # the checkpoint materialized everything downstream of the
-            # retired caches — safe to release them (and the probe base)
-            for d in retired:
-                d.unpersist()
-            retired = []
-            labels.unpersist()
-            labels = jumped.persist(StorageLevel.MEMORY_AND_DISK)
-            if changed == 0:
+        if i % _PROBE_EVERY == 0 or i == _MAX_ROUNDS:
+            labels = labels.localCheckpoint()
+            if labels.filter(F.col("label") != F.col("prev")).count() == 0:
                 break
-        else:
-            # off-probe round: no job — persist() is a lazy mark, the old
-            # labels stay cached until the next probe materializes
-            retired.append(labels)
-            labels = jumped.persist(StorageLevel.MEMORY_AND_DISK)
-    edges.unpersist()
     return labels.select(F.col("node"), F.col("label").alias("component"))
 
 
@@ -123,7 +111,6 @@ def pagerank_fixed_point(
     iters: int = 8,
     scale: int = 1_000_000,
     base: int = 150_000,
-    ckpt_every: int = 0,
     n_edges_hint: int | None = None,
     release_after_setup: tuple[DataFrame, ...] = (),
 ) -> DataFrame:
@@ -234,7 +221,7 @@ def pagerank_fixed_point(
     ranks = all_nodes.select(
         "node", F.lit(scale).cast("bigint").alias("r")
     ).repartition(nparts, "node")
-    for i in range(1, iters + 1):
+    for _ in range(iters):
         contrib = edges_deg.join(ranks, edges_deg.src == ranks.node).select(
             "dst",
             F.floor(F.col("r").cast("double") / F.col("d"))
@@ -252,16 +239,6 @@ def pagerank_fixed_point(
             )
             .select(F.col("dst").alias("node"), "r")
         )
-        # optional mid-flight lineage truncation. The r6 measurement had
-        # ckpt-after-4 winning (9.5 → 8.2s); the r8 re-audit reversed it
-        # (ckpt4 7.1-7.6s vs no-ckpt 5.5-6.7s warm — the eager
-        # materialization now costs more than the lineage it trims), so
-        # the default is OFF. Values are exact integers either way. At
-        # 100 TB on a real cluster, pass ckpt_every>0 and use reliable
-        # `checkpoint` — there the concern is executor-loss recompute of
-        # an 8-deep lineage, not local codegen overhead.
-        if ckpt_every and i % ckpt_every == 0 and i < iters:
-            ranks = ranks.localCheckpoint(eager=True)
     return ranks.select("node", F.col("r").alias("rank_fp"))
 
 

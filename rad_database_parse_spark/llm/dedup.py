@@ -228,16 +228,11 @@ def minhash_lsh_candidates(
     class pair is `array_intersect` inside codegen — row-local on two
     joined arrays — never a re-explode of candidates against the token
     table (quadratic in bucket size)."""
-    from pyspark import StorageLevel
-
-    wide = minhash_signatures_wide(df, text_col, id_col, num_hashes).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # Materialize the cache NOW: the plan below references wide from ~6
-    # broadcast subtrees, and broadcast exchanges build EAGERLY in parallel
-    # at query start — before a lazily-populated cache exists, each one
-    # would recompute the whole tokenize→hash→aggregate pipeline.
-    wide.count()
+    # Checkpoint NOW: the plan below references wide from ~6 broadcast
+    # subtrees, and broadcast exchanges build EAGERLY in parallel at query
+    # start — over a lazy plan each one would recompute the whole
+    # tokenize→hash→aggregate pipeline.
+    wide = minhash_signatures_wide(df, text_col, id_col, num_hashes).localCheckpoint()
     num_bands = num_hashes // band_size
     band_sig_cols = [
         F.concat_ws(
@@ -272,7 +267,7 @@ def minhash_lsh_candidates(
         *[F.min(f"mh_{i}").alias(f"mh_{i}") for i in range(num_hashes)],
         F.count("*").alias("grp_n"),
     )
-    # persisted + eagerly materialized: the self-join references bands twice
+    # checkpointed: the self-join references bands twice
     # (each reference would re-run the reps aggregation and pay another AQE
     # stage barrier), and it is signature-count-sized — tiny relative to the
     # corpus at any scale
@@ -284,9 +279,8 @@ def minhash_lsh_candidates(
             F.explode(band_structs).alias("bs"),
         )
         .select("sig_key", "grp_n", "sigs", "bs.band", "bs.band_sig")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
-    bands.count()
     a = bands.alias("a")
     b = bands.alias("b")
     earlier_collision = F.exists(
@@ -331,9 +325,8 @@ def minhash_lsh_candidates(
             F.first("sig_key").alias("sig_key"),
             F.collect_list(id_col).alias("member_ids"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
-    cls.count()
     # doc ↔ class membership (narrow), exploded from the class rows — no
     # second array-keyed join against the corpus
     cm = cls.select(
@@ -501,9 +494,9 @@ def minhash_lsh_incremental(
             for b in range(num_bands)
         ]
     )
-    wide_i = minhash_signatures_wide(increment, text_col, id_col, num_hashes).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    wide_i = minhash_signatures_wide(
+        increment, text_col, id_col, num_hashes
+    ).localCheckpoint()
     wide_c = minhash_signatures_wide(corpus, text_col, id_col, num_hashes).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -595,9 +588,7 @@ def setsim_prefix_join(
             F.size("arr").alias("sz"),
         )
     )
-    from pyspark import StorageLevel
-
-    cls = (
+    cls = (  # referenced four times below; materialize once
         ordered.groupBy("tokens")
         .agg(
             F.min(id_col).alias("cls_id"),
@@ -605,9 +596,8 @@ def setsim_prefix_join(
             F.collect_list(id_col).alias("member_ids"),
             F.count("*").alias("grp_n"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
-    cls.count()  # referenced four times below; materialize once
     # PPJoin candidate generation, fully integer arithmetic (threshold as
     # the exact rational tn/10^6 so prefix lengths can never lose a pair
     # to a float-ceil rounding):
@@ -777,8 +767,6 @@ def containment_prefix_join(
     class with array_intersect; within-class ordered pairs are containment
     ≡ 1 with no arrays. Returns (id_a, id_b, containment), id_a != id_b,
     directed: id_a is the contained side."""
-    from pyspark import StorageLevel
-
     toks = (
         df.select(
             id_col,
@@ -810,9 +798,8 @@ def containment_prefix_join(
             F.collect_list(id_col).alias("member_ids"),
             F.count("*").alias("grp_n"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
-    cls.count()
     a_prefix = cls.select(
         F.col("cls_id").alias("cls_a"),
         F.col("sz").alias("sza"),

@@ -602,24 +602,7 @@ def part_name_neardup(spark: SparkSession, sf_dir: str):
     former worst case (64 blocks × ~31k parts = ~0.5G pairs in ONE task,
     join-output skew AQE cannot split) becomes 64 × ~35 length sub-blocks
     of ~5M candidate pairs each — ~100× less per-task volume, and a
-    standard many-key shuffle AQE can split further.
-
-    Hot-block remedy, pre-positioned r13 (VERDICT r12 item 5, SCALE.md):
-    ``spark.graft.neardup.salt = S`` (set through ``get_session``'s
-    ``extra_conf`` or ``spark.conf.set``; default 0 = off) additionally
-    salts BOTH sides of the join with a deterministic
-    ``pmod(xxhash64(partkey), S)`` — side A carries
-    its own salt and explodes the partner salt 0..S-1, side B the
-    mirror — so a qualifying pair matches at exactly one (sa, sb) of the
-    S² sub-keys and the output is IDENTICAL by construction while the
-    worst (blk, lk) key's per-task candidate volume drops S²-fold for an
-    S× input replication. Default OFF because this corpus measured
-    balanced (sf1 max/mean task skew 2.4 — SCALE.md); turn it on at
-    cluster scale when one hot (blk, length) key would put B²/2 pairs in
-    a single task that AQE's skew split cannot break (join-OUTPUT skew).
-    Salt keys are deterministic functions of the row (guide §2.5: a
-    rand()-derived key re-draws under fetch-failure retry and can
-    duplicate or lose pairs)."""
+    standard many-key shuffle AQE can split further."""
     p = t(spark, sf_dir, "part").select(
         "p_partkey",
         "p_name",
@@ -640,19 +623,8 @@ def part_name_neardup(spark: SparkSession, sf_dir: str):
         "blk",
         F.col("ln").alias("lk"),
     )
-    join_keys = ["blk", "lk"]
-    nsalt = int(spark.conf.get("spark.graft.neardup.salt", "0"))
-    if nsalt > 1:
-        partner = F.explode(F.array(*[F.lit(i) for i in range(nsalt)]))
-        a = a.withColumn(
-            "sa", F.pmod(F.xxhash64("id_a"), F.lit(nsalt))
-        ).withColumn("sb", partner)
-        b = b.withColumn("sa", partner).withColumn(
-            "sb", F.pmod(F.xxhash64("id_b"), F.lit(nsalt))
-        )
-        join_keys = ["blk", "lk", "sa", "sb"]
     return (
-        a.join(b, join_keys)
+        a.join(b, ["blk", "lk"])
         .filter(F.col("id_a") < F.col("id_b"))
         # thresholded levenshtein (Spark 3.5+) runs the banded O(len·k) DP
         # and returns -1 past the threshold — exact distances for every

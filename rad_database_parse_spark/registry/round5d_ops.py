@@ -773,7 +773,7 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str):
     cores). k is data-derived (ceil median initial degree) so the peel
     bites at every SF.
 
-    Distributed shape: the undirected edge list is persisted ONCE; each
+    Distributed shape: the undirected edge list is checkpointed ONCE; each
     peel round is two semi-join-shaped hash joins of the edge list
     against the surviving-node set plus one degree groupBy — the same
     per-iteration cost envelope as PageRank — and the driver loop exits
@@ -798,19 +798,18 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str):
                 F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
             )
         ).alias("p")
-    ).select("p.u", "p.v")
-    und = und.persist()
+    ).select("p.u", "p.v").localCheckpoint()
     deg0 = und.groupBy("u").agg(F.count("*").alias("d"))
     kv = deg0.agg(
         F.ceil(F.percentile(dbl(F.col("d")), 0.5)).cast("int").alias("k")
     )
     k = kv.collect()[0]["k"]  # scalar: one tiny agg, the peel loop needs it
-    nodes = deg0.select(F.col("u").alias("node")).persist()
+    nodes = deg0.select(F.col("u").alias("node")).localCheckpoint()
     prev_n = nodes.count()
     rounds = 0
     converged = False
     for _ in range(_KCORE_ROUNDS):
-        nxt = (
+        nodes = (
             und.join(nodes.withColumnRenamed("node", "u"), "u")
             .join(
                 nodes.select(F.col("node").alias("v")), "v"
@@ -819,11 +818,9 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str):
             .agg(F.count("*").alias("d"))
             .filter(F.col("d") >= k)
             .select(F.col("u").alias("node"))
-            .persist()
+            .localCheckpoint()
         )
-        n = nxt.count()
-        nodes.unpersist()
-        nodes = nxt
+        n = nodes.count()
         rounds += 1
         if n == prev_n:
             converged = True

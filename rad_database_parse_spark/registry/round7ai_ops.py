@@ -131,10 +131,9 @@ def emb_knn_loo_accuracy(spark: SparkSession, sf_dir: str):
             "CAST(aggregate(transform(qa, x -> x * x),"
             " CAST(0 AS BIGINT), (acc, x) -> acc + x) AS BIGINT) AS nn"
         ),
-    ).persist()
-    # Bounded-grain count: materializes the persisted nq cache (reused by
-    # corpus/queries/label lookups below) and sizes the block count so the
-    # per-block dense matrix stays ≤64 MB at any corpus size.
+    ).localCheckpoint()  # reused by corpus/queries/label lookups below
+    # Bounded-grain count: sizes the block count so the per-block dense
+    # matrix stays ≤64 MB at any corpus size.
     nb = _knn_block_count(nq.count())
     corpus_t = nq.select(
         F.lit(0).alias("role"),

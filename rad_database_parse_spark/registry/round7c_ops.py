@@ -578,12 +578,11 @@ def graph_ppr_seed_part(spark: SparkSession, sf_dir: str):
 
     r9 degree fold (the pagerank recipe, llm/cluster.py): degree comes
     from a count window over the repartitioned undirected edges and the
-    joined edges+deg relation persists ONCE — the old lazy
+    joined edges+deg relation is checkpointed ONCE — the old lazy
     groupBy+join deg was re-executed by every one of the 3 unrolled
     iterations' plan branches (3 edge-grain shuffles), and nodes/seed
-    now read the same cache. Interleaved A/B at sf0.1: 6.6-7.1s →
+    now read the same checkpoint. Interleaved A/B at sf0.1: 6.6-7.1s →
     4.75s, top-15 identical (exact fixed-point integers)."""
-    from pyspark import StorageLevel
     from pyspark.sql.window import Window
 
     from .round6b_ops import _copurchase_labels
@@ -602,9 +601,8 @@ def graph_ppr_seed_part(spark: SparkSession, sf_dir: str):
         .withColumn(
             "d", F.count("*").over(Window.partitionBy("u")).cast("bigint")
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()  # all 3 iterations + nodes/seed reuse it
     )
-    ed.count()  # materialize once; all 3 iterations + nodes/seed reuse it
     # Setup-cache release (VERDICT r12 item 4, the pagerank
     # release_after_setup idiom): the shared co-purchase caches serve
     # SETUP only here — und.count() materialized the edge cache, ed is

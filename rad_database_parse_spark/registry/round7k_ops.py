@@ -558,8 +558,7 @@ def graph_bfs_landmark_distances(spark: SparkSession, sf_dir: str):
         # unpersists any still-registered checkpoint RDDs between
         # queries — catalog clearCache alone does NOT cover these
         # RDD-level blocks. At 100 TB use reliable checkpoint() at the
-        # same cadence for executor-loss tolerance (same note as
-        # pagerank_fixed_point's ckpt_every).
+        # same cadence for executor-loss tolerance.
         d = (
             d.unionByName(expand)
             .groupBy("node")

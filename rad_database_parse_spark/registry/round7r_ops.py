@@ -521,10 +521,9 @@ def docs_bpe_multi_merge(spark: SparkSession, sf_dir: str):
     handled correctly: 'aaa' + merge(a,a) -> [aa, a]). Each round's
     argmax is a limit(1) row, so it is collected (bounded: one merge
     per round) and the next round's fold runs on literal s1/s2 —
-    which cuts the output's lineage from the per-round type tables,
-    letting every intermediate cache be unpersisted as soon as its
-    successor materializes (VERDICT r8 item 4; before this, 4 type-
-    table caches per call leaked until the gate's clearCache)."""
+    so the output holds no reference to the per-round type tables.
+    Each round's table is a checkpoint; rebinding `words` drops the
+    previous one and Spark's ContextCleaner frees its blocks."""
     d = t(spark, sf_dir, "documents")
     toks = d.select(
         F.explode(
@@ -541,7 +540,7 @@ def docs_bpe_multi_merge(spark: SparkSession, sf_dir: str):
         "word",
         "cnt",
         F.expr("split(word, '')").alias("syms"),
-    ).persist()
+    ).localCheckpoint()
     merges = []
     for k in range(1, _BPE_ROUNDS + 1):
         pairs = (
@@ -571,7 +570,7 @@ def docs_bpe_multi_merge(spark: SparkSession, sf_dir: str):
         merges.append((k, s1 + s2, support))
         if k == _BPE_ROUNDS:
             break  # the last merge needs no recount — skip the dead fold
-        nxt = (
+        words = (
             words.withColumn("s1", F.lit(s1))
             .withColumn("s2", F.lit(s2))
             .select(
@@ -586,12 +585,8 @@ def docs_bpe_multi_merge(spark: SparkSession, sf_dir: str):
                     "  concat(acc, array(s))))"
                 ).alias("syms"),
             )
-            .persist()
+            .localCheckpoint()
         )
-        nxt.count()  # materialize so the predecessor cache can drop now
-        words.unpersist()
-        words = nxt
-    words.unpersist()  # the merge rows are literals; nothing reads it
     return spark.createDataFrame(
         merges,
         "merge_order bigint, merged_token string, weighted_support bigint",

@@ -21,8 +21,6 @@ from pyspark.sql import SparkSession
 
 from .registry import clear_prepared_plans
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 _JVM_OPTS_KEY = "spark.driver.extraJavaOptions"
 _GC_FLAG = "-XX:+UseParallelGC"
 
@@ -59,7 +57,6 @@ def _merge_gc_flag(opts: str) -> str:
 def get_session(
     app_name: str = "rad_database_parse_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
@@ -75,10 +72,7 @@ def get_session(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -116,16 +110,17 @@ def clear_caches(spark: SparkSession) -> None:
     session. It is deliberately indiscriminate — it unpersists EVERY
     RDD in the context's persistent-RDD map, including caches owned by
     unrelated caller code on a shared ``getOrCreate`` session — so do
-    NOT call it from library paths; registry ops release their own
-    persists instead (ADVICE r11).
+    NOT call it from library paths.
 
-    ``spark.catalog.clearCache()`` only evicts CacheManager entries
-    (DataFrame ``persist``/``cache``). ``localCheckpoint`` blocks are
-    RDD-level persists OUTSIDE the CacheManager (ADVICE r10 —
-    ``graph_bfs_landmark_distances``'s 4 per-round checkpoints), freed
-    only when Python+JVM GC and the ContextCleaner get around to the
-    dropped references — nondeterministic over a long many-query
-    session. This sweeps both: the catalog cache, then every RDD still
+    Library paths materialize an intermediate with ``localCheckpoint``,
+    never ``persist`` + ``count``: a checkpoint adds no CacheManager
+    entry, and its blocks (RDD-level persists OUTSIDE the CacheManager)
+    are freed by the ContextCleaner once the caller drops the DataFrame
+    and Python+JVM GC collect it — at a nondeterministic time over a
+    long many-query session. ``spark.catalog.clearCache()`` only evicts
+    CacheManager entries (the lazy ``persist``/``cache`` marks some
+    registry ops still set). This sweeps both, so nothing one query
+    materialized outlives it: the catalog cache, then every RDD still
     registered in the context's persistent-RDD map.
 
     It also forgets the registry's prepared plans

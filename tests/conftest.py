@@ -51,6 +51,33 @@ def count_jobs(spark):
 
 
 @pytest.fixture()
+def executed_plans(spark):
+    """``executed_plans(fn)`` runs ``fn()`` and returns ``(physical plan
+    descriptions of the SQL executions it launched, fn's result)`` — the
+    plans of eager checkpoints, counts and collects inside ``fn``."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last_id():
+        # executions are listed in id order; ids only grow
+        bus.waitUntilEmpty()
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+    def run(fn):
+        first = last_id() + 1
+        out = fn()
+        plans = []
+        for e in range(first, last_id() + 1):
+            ui = store.execution(e)
+            if ui.isDefined():
+                plans.append(ui.get().physicalPlanDescription())
+        return plans, out
+
+    return run
+
+
+@pytest.fixture()
 def count_compiles(spark):
     """``count_compiles(fn)`` runs ``fn()`` and returns ``(number of
     generated classes Janino compiled meanwhile, fn's result)``; a class

@@ -134,6 +134,33 @@ def test_connected_components_path_and_clique(spark):
     assert assign[1] == (1, True) and assign[5] == (1, False)
     assert assign[10] == (10, True) and assign[12] == (10, False)
 
+
+def test_connected_components_plans_no_round_over_caller_lineage(
+    spark, tmp_path, executed_plans
+):
+    # the edge list is checkpointed at entry: that is the one execution
+    # that reads the caller's pairs; no round, and no plan over the
+    # result, reads or re-plans that lineage
+    from rad_database_parse_spark.llm.cluster import connected_components
+
+    path = str(tmp_path / "pairs.parquet")
+    spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], ["id_a", "id_b"]
+    ).write.parquet(path)
+    plans, comp = executed_plans(
+        lambda: connected_components(spark.read.parquet(path), "id_a", "id_b")
+    )
+    assert len(plans) > 2  # the entry checkpoint and the probes
+    assert sum("pairs.parquet" in p for p in plans) == 1
+    leaves = comp._jdf.queryExecution().analyzed().collectLeaves()
+    assert {leaves.apply(i).nodeName() for i in range(leaves.length())} == {
+        "LogicalRDD"
+    }
+    assert sorted(tuple(r) for r in comp.collect()) == [
+        (1, 1), (2, 1), (3, 1), (4, 1), (5, 1), (10, 10), (11, 10)
+    ]
+
+
 def test_simhash_64_extends_32(spark):
     docs = _docs(spark)
     s32 = {r.doc_id: r.simhash

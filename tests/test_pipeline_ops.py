@@ -141,30 +141,3 @@ def test_pack_sequences_conservation(spark, sf_dir):
     }
     assert got == want
 
-
-def test_neardup_salt_output_identical_and_keys_salted(spark, sf_dir):
-    """spark.graft.neardup.salt=S (the conf-gated hot-block triangle
-    split, VERDICT r12 item 5) must leave the pair set byte-identical —
-    a qualifying pair matches at exactly one (sa, sb) sub-key — and the
-    salted plan must actually join on the salt columns."""
-    from rad_database_parse_spark.registry import all_queries
-
-    fn = all_queries()["part_name_neardup"].fn
-    key = "spark.graft.neardup.salt"
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    spark.conf.unset(key)
-    base = fn(spark, sf_dir)
-    base_rows = rows(base)
-    assert "sa" not in base._jdf.queryExecution().executedPlan().toString()
-    try:
-        spark.conf.set(key, "3")
-        salted = fn(spark, sf_dir)
-        plan = salted._jdf.queryExecution().toString()
-        assert "sa" in plan and "sb" in plan  # join keys carry the salt
-        assert rows(salted) == base_rows
-        assert len(base_rows) > 0  # non-degenerate at this SF
-    finally:
-        spark.conf.unset(key)

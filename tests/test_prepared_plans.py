@@ -224,10 +224,14 @@ def _jobs_and_stages(spark, fn):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
-    stages = [
-        s for j in jobs for s in tracker.getJobInfo(j).stageIds
-        if tracker.getStageInfo(s).numCompletedTasks > 0
+    # past spark.ui.retainedStages the status store evicts the stages with
+    # the oldest completion time, skipped ones (none) first: a stage that
+    # ran a task during fn() completed last and is still there, so an
+    # evicted stage ran none
+    infos = [
+        tracker.getStageInfo(s) for j in jobs for s in tracker.getJobInfo(j).stageIds
     ]
+    stages = [i for i in infos if i is not None and i.numCompletedTasks > 0]
     return len(jobs), len(stages), out
 
 
